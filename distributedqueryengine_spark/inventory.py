@@ -691,8 +691,10 @@ _APPROX_S = [("key", "string"), ("n_exact", "bigint"), ("within_bound", "int")]
 _GK_DELTA = 0.002
 
 
-# q_approx_sketches's shared exact-distinct aggregate, at most one
-# cached copy per session (see the scoping note inside the function)
+# q_approx_sketches's five scoped persists (projected lineitem and
+# orders, exact-distinct aggregate, exact-percentile join, Bloom state),
+# at most one construction's copy per session (see the scoping note
+# inside the function)
 _SKETCH_SHARED_CACHE: list[DataFrame] = []
 
 
@@ -723,14 +725,14 @@ def q_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # one distinct-customer aggregate, two consumers (hll verdict row +
     # kmv verdict join) — persist (lazy), not localCheckpoint (eager).
-    # Every cached stage of this query (ex / exact / bstate) is SCOPED:
-    # each construction evicts the previous call's entries, so a
-    # long-lived session building this query repeatedly holds at most
-    # one construction's worth of cache instead of accumulating
-    # partitions (r11 verdict item 5). Evicting the previous entries is
-    # safe even mid-flight: all are plain persists with intact lineage,
-    # so a still-running consumer degrades to recompute, never to a
-    # wrong answer.
+    # Every cached stage of this query (li / orders / ex / exact /
+    # bstate) is SCOPED: each construction evicts the previous call's
+    # entries, so a long-lived session building this query repeatedly
+    # holds at most one construction's worth of cache instead of
+    # accumulating partitions (r11 verdict item 5). Evicting the
+    # previous entries is safe even mid-flight: all are plain persists
+    # with intact lineage, so a still-running consumer degrades to
+    # recompute, never to a wrong answer.
     while _SKETCH_SHARED_CACHE:
         try:
             _SKETCH_SHARED_CACHE.pop().unpersist()
