@@ -175,26 +175,6 @@ def score_perplexity(
     )
 
 
-def _framed(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    vocab_arr,
-    n_bos: int,
-    tokens_col: str | None = None,
-):
-    """(id, toks) with n_bos BOS markers, UNK mapping, one EOS."""
-    base = _normalized_tokens(df, text_col, id_col, tokens_col)
-    return base.select(
-        "id",
-        F.concat(
-            F.array(*[F.lit(BOS)] * n_bos),
-            _map_unk(F.col("toks"), vocab_arr),
-            F.array(F.lit(EOS)),
-        ).alias("toks"),
-    )
-
-
 def _grams(framed: DataFrame, n: int, names: list[str]) -> DataFrame:
     """(id, <names...>) — one row per n-gram of the framed tokens,
     via the zip_with/slice codegen formulation (no HOF re-evaluation,
@@ -218,13 +198,25 @@ def _grams(framed: DataFrame, n: int, names: list[str]) -> DataFrame:
     )
 
 
-# framing markers used INTERNALLY by the lazy-vocab path: tokens are
+# framing markers used INTERNALLY by the trigram model: tokens are
 # whitespace-split, so no raw token can contain a space — a leading
 # space makes the marker collision-proof against corpus tokens that
 # literally spell "<s>"/"</s>" (which must go through the vocab test
-# like any other token, exactly as the literal-array path treats them)
+# like any other token)
 _BOS_MARK = " <s>"
 _EOS_MARK = " </s>"
+
+
+def _marker_framed(base: DataFrame) -> DataFrame:
+    """(id, toks) framed as two BOS markers, the raw tokens, one EOS."""
+    return base.select(
+        "id",
+        F.concat(
+            F.array(F.lit(_BOS_MARK), F.lit(_BOS_MARK)),
+            F.col("toks"),
+            F.array(F.lit(_EOS_MARK)),
+        ).alias("toks"),
+    )
 
 
 def _remap_gram_cols(df: DataFrame, cols: list[str], keep: DataFrame) -> DataFrame:
@@ -261,8 +253,6 @@ def train_trigram_lm(
     id_col: str = "doc_id",
     vocab_size: int = 10_000,
     tokens_col: str | None = None,
-    lazy_totals: bool = False,
-    lazy_vocab: bool = False,
 ) -> dict:
     """Stupid-backoff trigram model (Brants et al. 2007, "Large
     Language Models in Machine Translation" — the score the web-scale
@@ -271,33 +261,31 @@ def train_trigram_lm(
     'trigrams'/'bigrams'/'unigrams' count DataFrames}. All three
     count tables come from ONE tokenize+frame pass (two BOS + one EOS
     so every real token heads exactly one trigram) and stay
-    distributed; only the vocabulary collects (bounded by
-    vocab_size).
+    distributed.
 
-    ``lazy_vocab=True`` (r17): the vocabulary never collects — it
-    stays a top-`vocab_size` frame, and the UNK mapping moves from a
-    per-token O(|vocab|) literal-array scan to broadcast hash joins on
-    the (small) gram COUNT tables: grams count over raw tokens first,
-    each gram column remaps via the vocab frame, and a re-aggregate
-    merges the mapped keys — identical counts (sum over the preimage),
-    pinned in tests/test_lm.py. Zero construction-time jobs; 'vocab'
-    in the returned dict is the frame, 'v' and 'n_tokens' ride a
-    1-row meta frame that scoring broadcast-crosses into the floor
-    term (implies lazy_totals)."""
+    The vocabulary never collects (r17): it stays a top-`vocab_size`
+    frame, and the UNK mapping runs as broadcast hash joins on the
+    (small) gram COUNT tables instead of a per-token O(|vocab|)
+    literal-array scan — grams count over raw tokens first, each gram
+    column remaps via the vocab frame, and a re-aggregate merges the
+    mapped keys, so each count is the sum over its preimage (pinned
+    against a pure-python reference in tests/test_lm.py, including
+    tokens that spell the markers and blank docs). Zero
+    construction-time jobs: 'vocab' in the returned dict is the frame,
+    and 'v' and 'n_tokens' are one 1-row meta frame that scoring
+    broadcast-crosses into the floor term."""
     if vocab_size < 1:
         raise ValueError(f"vocab_size must be >= 1, got {vocab_size}")
     # Tokenize ONCE: `base` feeds the vocab count AND the framed-gram
-    # pass, and `framed` feeds three count tables (tri/bi/uni) — the
-    # UNK map is an O(len·|vocab|) array_contains per token, so
-    # re-deriving it per count table tripled the train cost before
-    # r15. Both persists ride dedup's bounded FIFO.
+    # pass, and `framed` feeds three count tables (tri/bi/uni). The
+    # persists ride dedup's bounded FIFO.
     from distributedqueryengine_spark.functions.dedup import _scoped_persist
 
     base = _normalized_tokens(corpus, text_col, id_col, tokens_col)
-    # The UNK map over `framed` is O(tokens × |vocab|) CPU; if the
-    # corpus arrives as a near-single-partition scan (one small file),
-    # widen to a small floor so the map parallelizes — small, because
-    # per-task overhead swamps tiny cached partitions (measured).
+    # if the corpus arrives as a near-single-partition scan (one small
+    # file), widen to a small floor so the gram passes parallelize —
+    # small, because per-task overhead swamps tiny cached partitions
+    # (measured).
     if base.rdd.getNumPartitions() < 4:
         base = base.repartition(4)
     base = _scoped_persist(base)
@@ -306,117 +294,52 @@ def train_trigram_lm(
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    if lazy_vocab:
-        vocab_df = _scoped_persist(
-            counts.orderBy(F.col("c").desc(), F.col("w").asc())
-            .limit(vocab_size)
-            .select(F.col("w").alias("kw"))
-        )
-        framed = _scoped_persist(
-            base.select(
-                "id",
-                F.concat(
-                    F.array(F.lit(_BOS_MARK), F.lit(_BOS_MARK)),
-                    F.col("toks"),
-                    F.array(F.lit(_EOS_MARK)),
-                ).alias("toks"),
-            )
-        )
+    vocab_df = _scoped_persist(
+        counts.orderBy(F.col("c").desc(), F.col("w").asc())
+        .limit(vocab_size)
+        .select(F.col("w").alias("kw"))
+    )
+    framed = _scoped_persist(_marker_framed(base))
 
-        def _counted(n: int, names: list[str]) -> DataFrame:
-            raw = (
-                _grams(framed, n, names)
-                .groupBy(*names)
-                .agg(F.count(F.lit(1)).alias("c"))
-            )
-            return (
-                _remap_gram_cols(raw, names, vocab_df)
-                .groupBy(*names)
-                .agg(F.sum("c").alias("c"))
-            )
-
-        tri = _scoped_persist(_counted(3, ["w1", "w2", "w3"]))
-        bi = _scoped_persist(_counted(2, ["w1", "w2"]))
-        uni = _scoped_persist(
-            _remap_gram_cols(
-                framed.select(F.explode("toks").alias("w"))
-                .groupBy("w")
-                .agg(F.count(F.lit(1)).alias("c")),
-                ["w"],
-                vocab_df,
-            )
-            .groupBy("w")
+    def _counted(n: int, names: list[str]) -> DataFrame:
+        raw = (
+            _grams(framed, n, names)
+            .groupBy(*names)
+            .agg(F.count(F.lit(1)).alias("c"))
+        )
+        return (
+            _remap_gram_cols(raw, names, vocab_df)
+            .groupBy(*names)
             .agg(F.sum("c").alias("c"))
         )
-        meta = uni.agg(
-            F.coalesce(F.sum("c"), F.lit(0)).alias("__lm_ntok")
-        ).crossJoin(
-            F.broadcast(
-                vocab_df.agg(
-                    (F.count(F.lit(1)) + F.lit(3)).alias("__lm_v")
-                )
-            )
-        )
-        return {
-            "vocab": vocab_df,
-            "v": meta,
-            "n_tokens": meta,
-            "trigrams": tri,
-            "bigrams": bi,
-            "unigrams": uni,
-        }
-    vocab_rows = counts.orderBy(F.col("c").desc(), F.col("w").asc()).limit(
-        vocab_size
-    ).collect()  # bounded by vocab_size BY CONTRACT
-    vocab = sorted(r.w for r in vocab_rows)
-    vocab_arr = F.array(*[F.lit(w) for w in vocab])
 
-    framed = _scoped_persist(
-        base.select(
-            "id",
-            F.concat(
-                F.array(F.lit(BOS), F.lit(BOS)),
-                _map_unk(F.col("toks"), vocab_arr),
-                F.array(F.lit(EOS)),
-            ).alias("toks"),
+    # The count tables are vocab-sized; scoring joins bigrams and
+    # unigrams TWICE each (bi12/bi23, uni2/uni3), so persist them too.
+    tri = _scoped_persist(_counted(3, ["w1", "w2", "w3"]))
+    bi = _scoped_persist(_counted(2, ["w1", "w2"]))
+    uni = _scoped_persist(
+        _remap_gram_cols(
+            framed.select(F.explode("toks").alias("w"))
+            .groupBy("w")
+            .agg(F.count(F.lit(1)).alias("c")),
+            ["w"],
+            vocab_df,
+        )
+        .groupBy("w")
+        .agg(F.sum("c").alias("c"))
+    )
+    # V = |vocab| + unk + bos + eos
+    meta = uni.agg(
+        F.coalesce(F.sum("c"), F.lit(0)).alias("__lm_ntok")
+    ).crossJoin(
+        F.broadcast(
+            vocab_df.agg((F.count(F.lit(1)) + F.lit(3)).alias("__lm_v"))
         )
     )
-    tri = (
-        _grams(framed, 3, ["w1", "w2", "w3"])
-        .groupBy("w1", "w2", "w3").agg(F.count(F.lit(1)).alias("c"))
-    )
-    bi = (
-        _grams(framed, 2, ["w1", "w2"])
-        .groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c"))
-    )
-    uni = (
-        framed.select(F.explode("toks").alias("w"))
-        .groupBy("w").agg(F.count(F.lit(1)).alias("c"))
-    )
-    # The count tables are vocab-sized (≤ V³ keys, in practice tiny);
-    # scoring joins bigrams and unigrams TWICE each (bi12/bi23,
-    # uni2/uni3), so persist them too — same FIFO discipline.
-    tri = _scoped_persist(tri)
-    bi = _scoped_persist(bi)
-    uni = _scoped_persist(uni)
-    # lazy_totals (r16): the token total is one SUM over the (tiny,
-    # persisted) unigram table, but collecting it here costs a serial
-    # synchronization job at model-construction time. A latency-
-    # sensitive caller (the text_wordcount suite) keeps it as a 1-row
-    # frame that score_stupid_backoff broadcast-crosses into the floor
-    # term — the bounded 1-row cross-join class the plan gate
-    # whitelists — deferring the job into the scoring action. Same
-    # long value, so the floor arithmetic is bit-identical.
-    if lazy_totals:
-        n_tokens = uni.agg(
-            F.coalesce(F.sum("c"), F.lit(0)).alias("__lm_ntok")
-        )
-    else:
-        n_tokens = int(uni.agg(F.sum("c")).collect()[0][0])
     return {
-        "vocab": vocab,
-        "v": len(vocab) + 3,  # + unk + bos + eos
-        "n_tokens": n_tokens,
+        "vocab": vocab_df,
+        "v": meta,
+        "n_tokens": meta,
         "trigrams": tri,
         "bigrams": bi,
         "unigrams": uni,
@@ -448,40 +371,18 @@ def score_stupid_backoff(
     stays JVM-side."""
     if not 0 < alpha <= 1:
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
-    if isinstance(lm["vocab"], DataFrame):
-        # lazy_vocab model: frame with marker framing, remap the gram
-        # columns via broadcast joins (value-identical to _map_unk),
-        # and the 1-row (n_tokens, v) meta frame rides a broadcast
-        # cross into the floor term
-        base = _normalized_tokens(docs, text_col, id_col, tokens_col)
-        framed = base.select(
-            "id",
-            F.concat(
-                F.array(F.lit(_BOS_MARK), F.lit(_BOS_MARK)),
-                F.col("toks"),
-                F.array(F.lit(_EOS_MARK)),
-            ).alias("toks"),
-        )
-        g = _remap_gram_cols(
-            _grams(framed, 3, ["w1", "w2", "w3"]),
-            ["w1", "w2", "w3"],
-            lm["vocab"],
-        )
-        g = g.crossJoin(F.broadcast(lm["n_tokens"]))
-        floor_den = F.col("__lm_ntok") + F.col("__lm_v")
-    else:
-        vocab_arr = F.array(*[F.lit(w) for w in lm["vocab"]])
-        v = int(lm["v"])
-        framed = _framed(docs, text_col, id_col, vocab_arr, n_bos=2,
-                         tokens_col=tokens_col)
-        g = _grams(framed, 3, ["w1", "w2", "w3"])
-        if isinstance(lm["n_tokens"], DataFrame):
-            # lazy_totals mode: the 1-row token total rides a broadcast
-            # cross join instead of a construction-time collect
-            g = g.crossJoin(F.broadcast(lm["n_tokens"]))
-            floor_den = F.col("__lm_ntok") + F.lit(v)
-        else:
-            floor_den = F.lit(int(lm["n_tokens"]) + v)
+    # marker framing, gram columns remapped via the vocab frame, and
+    # the 1-row (n_tokens, v) meta frame broadcast-crossed into the
+    # floor term
+    framed = _marker_framed(
+        _normalized_tokens(docs, text_col, id_col, tokens_col)
+    )
+    g = _remap_gram_cols(
+        _grams(framed, 3, ["w1", "w2", "w3"]),
+        ["w1", "w2", "w3"],
+        lm["vocab"],
+    ).crossJoin(F.broadcast(lm["n_tokens"]))
+    floor_den = F.col("__lm_ntok") + F.col("__lm_v")
 
     tri = lm["trigrams"].withColumnRenamed("c", "__ct")
     bi12 = lm["bigrams"].withColumnRenamed("c", "__cb12")

@@ -187,101 +187,63 @@ def _budget_prefix_lazy(
     """Fully-LAZY two-phase maximal-prefix selection (r17): the same
     arithmetic as the collect paths of :func:`select_until_budget` /
     :func:`select_until_budget_grouped`, but with the driver's stats
-    collects replaced by in-plan frames — per-(group) score bounds
-    broadcast-joined back, per-(group, segment) weight totals turned
-    into exclusive bases by ONE bounded window over the stats frame
-    (≤ n_buckets rows per group — the distributed analog of the
-    driver's sorted-loop cumsum), bases broadcast-joined onto the
-    corpus. ZERO construction-time jobs; identical output rows
-    (pinned in tests/test_sampling.py). No skew refinement — see the
-    callers' lazy_prefix contract.
+    collects replaced by the in-plan segmented prefix
+    (`operators.windows._segment_prefix`: per-(group, segment) weight
+    totals turned into exclusive bases by ONE bounded window over the
+    stats frame — the distributed analog of the driver's sorted-loop
+    cumsum). Segments whose base already exceeds their budget are
+    pruned before the join back. ZERO construction-time jobs;
+    identical output rows (pinned in tests/test_sampling.py). No skew
+    refinement — see the callers' lazy_prefix contract.
 
     `ksrc` carries (grp?, id, score, wt, __k); `budgets` is an int
     (ungrouped) or {group: budget} dict (grouped, keyed by `grp`).
     Returns (grp?, id, score, weight, cum).
     """
-    from pyspark.sql.types import StructField, StructType
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
     from pyspark.sql.window import Window
 
-    spark = ksrc.sparkSession
+    from distributedqueryengine_spark.operators.windows import (
+        _join_on_keys,
+        _segment_prefix,
+    )
+
     zero = 0 if wt_type == "long" else 0.0
     keys = [] if group_col is None else ["grp"]
-    if group_col is None:
-        gst = ksrc.agg(
-            F.min("__k").alias("__glo"), F.max("__k").alias("__ghi")
-        )
-        b = ksrc.crossJoin(F.broadcast(gst))
-    else:
-        gst = ksrc.groupBy("grp").agg(
-            F.min("__k").alias("__glo"), F.max("__k").alias("__ghi")
-        )
-        b = ksrc.join(F.broadcast(gst), "grp")
-    width = (F.col("__ghi") - F.col("__glo")) / F.lit(float(n_buckets))
-    seg = (
-        F.when(
-            F.col("__ghi") > F.col("__glo"),
-            F.least(
-                F.floor((F.col("__k") - F.col("__glo")) / width),
-                F.lit(n_buckets - 1),
-            ),
-        )
-        .otherwise(F.lit(0))
-        .cast("long")
+    num = int if wt_type == "long" else float
+    btbl = ksrc.sparkSession.createDataFrame(
+        [(num(budgets),)] if group_col is None
+        else [(g, num(v)) for g, v in budgets.items()],
+        StructType(
+            [StructField(k, ksrc.schema[k].dataType) for k in keys]
+            + [
+                StructField(
+                    "__budget",
+                    LongType() if wt_type == "long" else DoubleType(),
+                )
+            ]
+        ),
     )
-    b = b.withColumn("__seg", seg).drop("__glo", "__ghi")
-    stats = b.groupBy(*keys, "__seg").agg(F.sum("wt").alias("__m"))
-    wseg = (
-        Window.partitionBy(*keys)
-        .orderBy("__seg")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    bases = stats.withColumn(
-        "__base",
-        F.coalesce(F.sum("__m").over(wseg), F.lit(zero)).cast(wt_type),
-    )
-    if group_col is None:
-        bases = bases.withColumn(
-            "__budget",
-            F.lit(int(budgets) if wt_type == "long" else float(budgets))
-            .cast(wt_type),
-        )
-    else:
-        from pyspark.sql.types import DoubleType, LongType
 
-        btbl = spark.createDataFrame(
-            [
-                (g, int(v) if wt_type == "long" else float(v))
-                for g, v in budgets.items()
-            ],
-            StructType(
-                [
-                    StructField("grp", ksrc.schema["grp"].dataType),
-                    StructField(
-                        "__budget",
-                        LongType() if wt_type == "long" else DoubleType(),
-                    ),
-                ]
-            ),
+    def prune(stats: DataFrame) -> DataFrame:
+        return (
+            _join_on_keys(stats, btbl, keys)
+            .filter(F.col("__base") <= F.col("__budget"))
+            .select(*keys, "__seg", "__base", "__budget")
         )
-        bases = bases.join(F.broadcast(btbl), "grp")
-    bases = bases.filter(F.col("__base") <= F.col("__budget")).select(
-        *keys, "__seg", "__base", "__budget"
-    )
+
+    b = _segment_prefix(ksrc, keys, "__k", n_buckets, F.sum("wt"), prune)
     w = (
         Window.partitionBy(*keys, "__seg")
         .orderBy(F.col("score").desc(), F.col("id").asc())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    out = (
-        b.join(F.broadcast(bases), keys + ["__seg"])
-        .withColumn(
-            "cum",
-            F.col("__base")
-            + F.coalesce(F.sum("wt").over(w), F.lit(zero))
-            + F.col("wt"),
-        )
-        .filter(F.col("cum") <= F.col("__budget"))
-    )
+    out = b.withColumn(
+        "cum",
+        F.col("__base")
+        + F.coalesce(F.sum("wt").over(w), F.lit(zero))
+        + F.col("wt"),
+    ).filter(F.col("cum") <= F.col("__budget"))
     if group_col is None:
         return out.select("id", "score", F.col("wt").alias("weight"), "cum")
     return out.select(
@@ -442,12 +404,22 @@ def temperature_mixture_rates(
         ).alias("n_rows")
     )
     sizes = df.groupBy(F.col(group_col).alias("group")).agg(w)
+    return _rates_from_sizes(sizes, temperature).drop("__groups")
+
+
+def _rates_from_sizes(sizes: DataFrame, temperature: float) -> DataFrame:
+    """temperature_mixture_rates over a (group, n_rows) sizes frame,
+    plus `__groups`, the number of groups, from the same 1-row totals
+    aggregate (so a caller can bound the catalog without another
+    pass)."""
     powed = sizes.select(
         "group", "n_rows",
         F.pow(F.col("n_rows").cast("double"), F.lit(1.0 / temperature)).alias("pw"),
     )
     tot = powed.agg(
-        F.sum("pw").alias("__z"), F.sum("n_rows").alias("__n")
+        F.sum("pw").alias("__z"),
+        F.sum("n_rows").alias("__n"),
+        F.count(F.lit(1)).alias("__groups"),
     )
     return (
         powed.crossJoin(F.broadcast(tot))
@@ -462,6 +434,7 @@ def temperature_mixture_rates(
                 ),
                 6,
             ).alias("rate"),
+            "__groups",
         )
     )
 
@@ -752,23 +725,8 @@ def apply_mixture_rates(
     per_group: dict = {}
     for row in counts:
         per_group.setdefault(row[group_col], {})[row["__mb"]] = row["c"]
-    return _mixture_materialize(
-        b, per_group, rate_by_group, group_col, id_col, key
-    )
-
-
-def _mixture_materialize(
-    b: DataFrame,
-    per_group: dict,
-    rate_by_group: dict,
-    group_col: str,
-    id_col: str,
-    key: Column,
-) -> DataFrame:
-    """Shared tail of the two-phase mixture paths: driver quotas +
-    exclusive prefixes from the (group, bucket) counts, pre-scan
-    pruning of sub-buckets past their quota, one bounded window per
-    surviving sub-bucket. `b` must already carry `__mb`."""
+    # driver quotas + exclusive prefixes from the (group, bucket)
+    # counts; one bounded window per surviving sub-bucket
     base_rows = []
     for g, buckets in per_group.items():
         n_g = sum(buckets.values())
@@ -783,7 +741,6 @@ def _mixture_materialize(
     if not base_rows:
         return b.drop("__mb").limit(0)
     from pyspark.sql.types import LongType, StructField, StructType
-    from pyspark.sql.window import Window
 
     bases = b.sparkSession.createDataFrame(
         base_rows,
@@ -813,7 +770,6 @@ def apply_temperature_mixture(
     seed: int = 0,
     max_driver_groups: int = 1024,
     n_buckets: int = 64,
-    lazy_quotas: bool = False,
 ) -> DataFrame:
     """Fused temperature_mixture_rates ∘ apply_mixture_rates (r15):
     identical output rows, ONE corpus aggregate instead of two.
@@ -822,34 +778,21 @@ def apply_temperature_mixture(
     aggregates group sizes, then apply_mixture_rates aggregates
     (group, bucket) counts — but the second aggregate already CONTAINS
     the group sizes (sum over a group's buckets). Here the (group,
-    bucket) counts collect once, the group sizes derive driver-side,
-    and the rate arithmetic re-runs temperature_mixture_rates over a
-    LOCAL groups-sized frame — the same Spark expressions, so the 6dp
-    rate rounding is bit-identical to the split form (python round()
-    is banker's; Spark's is HALF_UP — driver-python rates would
-    diverge on .0000005 boundaries). Materialization reuses the exact
-    two-phase tail, so fused ≡ split is structural (pinned in
-    tests/test_sampling.py).
+    bucket) counts, the group sizes derived from them, the temperature
+    rates (the same Spark expressions as the split form, so the 6dp
+    rate rounding is bit-identical), every group's ceil(rate·n) quota
+    and the exclusive bucket prefixes ALL ride the final plan as
+    bounded broadcast frames — zero construction-time jobs. The
+    materialization is apply_mixture_rates' hash-range sub-bucket rank,
+    so fused ≡ split (pinned in tests/test_sampling.py).
 
-    Groups beyond ``max_driver_groups`` fall back to the split form's
-    high-cardinality window path (where per-group windows parallelize
-    fine on their own). The counts collect is LIMIT-bounded at
-    max_driver_groups × n_buckets rows (r16 ADVICE: an unbounded
-    collect meant a million-group column could OOM the driver BEFORE
-    the cardinality check ran) — exceeding the bound proves
-    high cardinality without transferring the overflow, at zero extra
-    jobs.
+    The quota and prefix broadcasts are groups × ``n_buckets`` rows, so
+    the group catalog must be bounded (a curation corpus has dozens of
+    sources, not millions): a column with more than
+    ``max_driver_groups`` groups fails the plan when it runs, naming
+    apply_mixture_rates, whose window path serves high cardinality."""
+    from pyspark.sql.window import Window
 
-    ``lazy_quotas=True`` (r17): the (group, bucket) counts, the
-    temperature rates, every group's ceil(rate·n) quota and the
-    exclusive bucket prefixes ALL ride the final plan as bounded
-    broadcast frames — zero construction-time jobs, identical rows
-    (the rate arithmetic is the same Spark expressions over the same
-    counts; pinned in tests/test_sampling.py). No high-cardinality
-    fallback on this path: the caller asserts a bounded group catalog
-    (a curation corpus has dozens of sources, not millions) — the
-    quota/bases broadcast is groups×n_buckets rows."""
-    spark = df.sparkSession
     key = F.md5(
         F.concat_ws("§", F.lit(str(seed)), F.col(id_col).cast("string"))
     )
@@ -858,81 +801,48 @@ def apply_temperature_mixture(
         "__mb",
         F.least(F.floor(u * F.lit(n_buckets)), F.lit(n_buckets - 1)).cast("long"),
     )
-    if lazy_quotas:
-        from pyspark.sql.window import Window
-
-        counts = b.groupBy(group_col, "__mb").agg(
-            F.count(F.lit(1)).alias("__c")
-        )
-        sizes = counts.groupBy(group_col).agg(F.sum("__c").alias("n"))
-        quotas = temperature_mixture_rates(
-            sizes.select(F.col(group_col).alias("group"), "n"),
-            "group", temperature=temperature, weight_col="n",
-        ).select(
-            F.col("group").alias(group_col),
-            F.ceil(F.col("rate") * F.col("n_rows")).alias("__quota"),
-        )
-        wmb = (
-            Window.partitionBy(group_col)
-            .orderBy("__mb")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        bases = (
-            counts.withColumn(
-                "__base",
-                F.coalesce(F.sum("__c").over(wmb), F.lit(0)).cast("long"),
-            )
-            .join(F.broadcast(quotas), group_col)
-            .filter(F.col("__base") < F.col("__quota"))
-            .select(group_col, "__mb", "__base", "__quota")
-        )
-        wr = Window.partitionBy(group_col, "__mb").orderBy(
-            key, F.col(id_col)
-        )
-        return (
-            b.join(F.broadcast(bases), [group_col, "__mb"])
-            .withColumn("__rn", F.col("__base") + F.row_number().over(wr))
-            .filter(F.col("__rn") <= F.col("__quota"))
-            .drop("__mb", "__base", "__quota", "__rn")
-        )
-    bound = max(max_driver_groups, 0) * n_buckets
-    counts = (
-        b.groupBy(group_col, "__mb")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .limit(bound + 1)
-        .collect()
+    counts = b.groupBy(group_col, "__mb").agg(F.count(F.lit(1)).alias("__c"))
+    sizes = counts.groupBy(F.col(group_col).alias("group")).agg(
+        F.sum("__c").alias("n_rows")
     )
-    per_group: dict = {}
-    if len(counts) <= bound:
-        for row in counts:
-            per_group.setdefault(row[group_col], {})[row["__mb"]] = row["c"]
-    if len(counts) > bound or len(per_group) > max_driver_groups:
-        rates = temperature_mixture_rates(
-            df.select(F.col(group_col).alias("group")), "group",
-            temperature=temperature,
+    cap = max(max_driver_groups, 0)
+    too_many = F.raise_error(
+        F.concat(
+            F.lit("apply_temperature_mixture broadcasts per-group quotas ("),
+            F.col("__groups").cast("string"),
+            F.lit(
+                f" groups > max_driver_groups={cap}); for higher-cardinality "
+                "grouping use a rate-based mixture (apply_mixture_rates) "
+                "instead"
+            ),
         )
-        return apply_mixture_rates(
-            df, rates, group_col, id_col, seed=seed, max_driver_groups=0
-        )
-    if not per_group:
-        return b.drop("__mb").limit(0)
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    local = spark.createDataFrame(
-        [(g, sum(v.values())) for g, v in per_group.items()],
-        StructType([
-            StructField("group", b.schema[group_col].dataType),
-            StructField("n", LongType()),
-        ]),
     )
-    rate_by_group = {
-        r["group"]: r["rate"]
-        for r in temperature_mixture_rates(
-            local, "group", temperature=temperature, weight_col="n"
-        ).collect()
-    }
-    return _mixture_materialize(
-        b, per_group, rate_by_group, group_col, id_col, key
+    quotas = _rates_from_sizes(sizes, temperature).select(
+        F.col("group").alias(group_col),
+        F.when(F.col("__groups") > cap, too_many)
+        .otherwise(F.ceil(F.col("rate") * F.col("n_rows")))
+        .alias("__quota"),
+    )
+    wmb = (
+        Window.partitionBy(group_col)
+        .orderBy("__mb")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    bases = (
+        counts.withColumn(
+            "__base",
+            F.coalesce(F.sum("__c").over(wmb), F.lit(0)).cast("long"),
+        )
+        .join(F.broadcast(quotas), group_col)
+        .filter(F.col("__base") < F.col("__quota"))
+        .select(group_col, "__mb", "__base", "__quota")
+    )
+    wr = Window.partitionBy(group_col, "__mb").orderBy(key, F.col(id_col))
+    return (
+        b.join(F.broadcast(bases), [group_col, "__mb"])
+        .withColumn("__rn", F.col("__base") + F.row_number().over(wr))
+        .filter(F.col("__rn") <= F.col("__quota"))
+        .drop("__mb", "__base", "__quota", "__rn")
     )
 
 

@@ -809,13 +809,8 @@ def q_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact_percentiles_grouped,
     )
 
-    # two_phase=False (r17): the BOUNDED verification side keeps the
-    # single-window form (one exchange+sort, measured ~1s cheaper at
-    # sf0.1 than the two-phase rank); the scale-safe two-phase default
-    # serves the primary q_agg_percentiles path (r16 ADVICE split)
     bounds_df = exact_percentiles_grouped(
         li, "l_returnflag", "l_extendedprice", lo_ps + hi_ps + bk_bound_ps,
-        two_phase=False,
     )
     # LEFT join (r16 ADVICE): exact_percentiles_grouped omits groups
     # whose values are ALL NULL (matching F.percentile's NULL entries
@@ -1188,9 +1183,6 @@ def _mixture_applied(
          else Q._t(spark, sf_dir, "documents"))
     return apply_temperature_mixture(
         d, "source", "doc_id", temperature=0.5, seed=0,
-        # r17: `source` is a bounded catalog (dozens of values at any
-        # corpus size) — take the zero-collect lazy quota plan
-        lazy_quotas=True,
     ).select("doc_id", "source")
 
 

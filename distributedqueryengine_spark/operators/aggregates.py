@@ -460,7 +460,6 @@ def exact_percentiles_grouped(
     value_col: str,
     percentages: Sequence[float],
     out_col: str = "bounds",
-    two_phase: bool = True,
 ) -> DataFrame:
     """Exact interpolated percentiles per group, as one array column —
     Spark `percentile()` semantics (position = p·(n−1) over the sorted
@@ -474,16 +473,16 @@ def exact_percentiles_grouped(
     Shape (r17 rework — r16 ADVICE flagged the r16 form's one-window-
     task-per-group scale cliff, which F.percentile's parallel partial
     aggregation did not have): the global rank per group comes from
-    the repo's lazy two-phase prefix — per-group value bounds ride a
-    broadcast join, rows segment into monotone fixed-width value
-    ranges, the per-(group, segment) counts turn into exclusive rank
-    bases with ONE bounded in-plan window over the stats frame, and
+    the in-plan segmented prefix (`operators.windows._segment_prefix`)
+    — rows segment into monotone fixed-width value ranges per group,
+    the per-(group, segment) counts become exclusive rank bases, and
     each (group, segment) ranks its own slice in parallel. One hash
     aggregate then picks the straddling order statistics for every
     target rank with conditional maxes. No per-group serialization
-    anywhere; zero construction-time jobs. NULL values are ignored,
-    matching `percentile()`. The interpolation expression mirrors
-    Spark's `getPercentile` term for term, so results are bit-identical
+    anywhere; zero construction-time jobs. NULL values are ignored and
+    a NULL group key is a group of its own, both matching
+    `percentile()`. The interpolation expression mirrors Spark's
+    `getPercentile` term for term, so results are bit-identical
     doubles (pinned in tests/test_relational.py). Ranks within a tied
     value are arbitrary, which is irrelevant: a rank hit inside a tie
     run always selects the same value, and equal values share one
@@ -494,12 +493,6 @@ def exact_percentiles_grouped(
     NULL array entries. Join consumers should use a LEFT join if such
     groups can exist.
 
-    ``two_phase=False`` keeps the r16 single-window-per-group form
-    (one exchange + one sort — fewer passes, so faster where group
-    values fit one task comfortably): the right choice for BOUNDED
-    verification sides like q_approx_sketches, per the r16 ADVICE
-    split. The default is the scale-safe two-phase shape.
-
     The 100 TB note from q_approx_sketches stands: exact percentiles
     of any flavor need the full value multiset; at scale you run the
     GK/bottom-k sketch and verify on a sample. This helper keeps that
@@ -507,77 +500,20 @@ def exact_percentiles_grouped(
     segment sorts instead of an in-memory value map per group."""
     from pyspark.sql.window import Window
 
+    from distributedqueryengine_spark.operators.windows import _segment_prefix
+
     v = F.col(value_col).cast("double")
-    if not two_phase:
-        w1 = Window.partitionBy(group_col).orderBy("__v")
-        t = df.where(v.isNotNull()).select(group_col, v.alias("__v")).select(
-            group_col,
-            "__v",
-            (F.row_number().over(w1) - 1).alias("__i"),
-            F.count(F.lit(1)).over(Window.partitionBy(group_col)).alias("__n"),
-        )
-        return _percentile_pick(t, group_col, percentages, out_col)
-    nb = 256
     t0 = df.where(v.isNotNull()).select(group_col, v.alias("__v"))
-    gst = t0.groupBy(group_col).agg(
-        F.min("__v").alias("__glo"), F.max("__v").alias("__ghi")
-    )
-    seg = (
-        F.when(
-            F.col("__ghi") > F.col("__glo"),
-            F.least(
-                F.floor(
-                    (F.col("__v") - F.col("__glo"))
-                    / ((F.col("__ghi") - F.col("__glo")) / F.lit(float(nb)))
-                ),
-                F.lit(nb - 1),
-            ),
-        )
-        .otherwise(F.lit(0))
-        .cast("long")
-    )
-    b = (
-        t0.join(F.broadcast(gst), group_col)
-        .withColumn("__seg", seg)
-        .drop("__glo", "__ghi")
-    )
-    cnts = b.groupBy(group_col, "__seg").agg(F.count(F.lit(1)).alias("__c"))
-    wseg = (
-        Window.partitionBy(group_col)
-        .orderBy("__seg")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    # one pass over the stats frame carries BOTH the exclusive rank
-    # base (ordered window) and the group total (partition window)
-    bases = cnts.select(
-        group_col,
-        "__seg",
-        F.coalesce(F.sum("__c").over(wseg), F.lit(0))
-        .cast("long").alias("__base"),
-        F.sum("__c").over(Window.partitionBy(group_col)).alias("__n"),
-    )
+    b = _segment_prefix(t0, [group_col], "__v", 256, None)
     w = Window.partitionBy(group_col, "__seg").orderBy("__v")
-    t = (
-        b.join(F.broadcast(bases), [group_col, "__seg"])
-        .select(
-            group_col,
-            "__v",
-            (F.col("__base") + F.row_number().over(w) - 1).alias("__i"),
-            "__n",
-        )
+    t = b.select(
+        group_col,
+        "__v",
+        (F.col("__base") + F.row_number().over(w) - 1).alias("__i"),
+        F.col("__tot").alias("__n"),
     )
-    return _percentile_pick(t, group_col, percentages, out_col)
-
-
-def _percentile_pick(
-    t: DataFrame,
-    group_col: str,
-    percentages: Sequence[float],
-    out_col: str,
-) -> DataFrame:
-    """Shared tail of exact_percentiles_grouped: conditional-max
-    straddling order statistics over a ranked (group, __v, __i, __n)
-    frame + Spark's getPercentile interpolation, term for term."""
+    # conditional-max straddling order statistics + Spark's
+    # getPercentile interpolation, term for term
     aggs = [F.max("__n").alias("__n")]
     for i, p in enumerate(percentages):
         pos = F.lit(float(p)) * (F.col("__n") - 1).cast("double")

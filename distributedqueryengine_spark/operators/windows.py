@@ -11,7 +11,7 @@ RPC.cs:225-246).
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
@@ -321,6 +321,80 @@ def _rank_segments(
             .withColumnRenamed("__seg2", "__seg")
         )
     raise AssertionError("unreachable")  # pragma: no cover
+
+
+def _join_on_keys(left: DataFrame, right: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """Broadcast `right` onto `left` by NULL-safe equality on `keys`
+    (a NULL key is one group, as in groupBy); no keys is a cross join."""
+    if not keys:
+        return left.crossJoin(F.broadcast(right))
+    r = right.select(
+        *[F.col(k).alias(f"__r{k}") for k in keys],
+        *[c for c in right.columns if c not in keys],
+    )
+    cond = [F.col(k).eqNullSafe(F.col(f"__r{k}")) for k in keys]
+    return left.join(F.broadcast(r), cond).drop(*[f"__r{k}" for k in keys])
+
+
+def _segment_prefix(
+    b: DataFrame,
+    keys: Sequence[str],
+    value_col: str,
+    n_buckets: int,
+    measure: Column | None,
+    prune: Callable[[DataFrame], DataFrame] | None = None,
+) -> DataFrame:
+    """In-plan two-phase prefix per group of ``keys``: the lazy
+    counterpart of :func:`_rank_segments`, with no construction-time
+    job and no skew refinement. Per-group ``value_col`` bounds ride a
+    broadcast join, rows fall into ``n_buckets`` fixed-width value
+    segments (monotone in ascending ``value_col``), the per-(group,
+    segment) ``measure`` totals (an aggregate; default row count) turn
+    into exclusive bases with ONE window over the bounded stats frame,
+    and the stats broadcast-join back.
+
+    Returns `b` plus ``__seg``, ``__base`` (the measure over the
+    group's lower segments) and ``__tot`` (the group's total). The
+    caller's own window over (keys, ``__seg``) finishes the prefix
+    inside each segment. ``prune``, if given, maps the stats frame
+    (keys, ``__seg``, ``__base``, ``__tot``) to the rows that may
+    join back, so segments that cannot contribute never reach that
+    window. Both group joins are NULL-safe."""
+    m = measure if measure is not None else F.count(F.lit(1))
+    gst = b.groupBy(*keys).agg(
+        F.min(value_col).alias("__glo"), F.max(value_col).alias("__ghi")
+    )
+    width = (F.col("__ghi") - F.col("__glo")) / F.lit(float(n_buckets))
+    seg = (
+        F.when(
+            F.col("__ghi") > F.col("__glo"),
+            F.least(
+                F.floor((F.col(value_col) - F.col("__glo")) / width),
+                F.lit(n_buckets - 1),
+            ),
+        )
+        .otherwise(F.lit(0))
+        .cast("long")
+    )
+    b = _join_on_keys(b, gst, keys).withColumn("__seg", seg).drop("__glo", "__ghi")
+    wseg = (
+        Window.partitionBy(*keys)
+        .orderBy("__seg")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    stats = (
+        b.groupBy(*keys, "__seg")
+        .agg(m.alias("__m"))
+        .select(
+            *keys,
+            "__seg",
+            F.coalesce(F.sum("__m").over(wseg), F.lit(0)).alias("__base"),
+            F.sum("__m").over(Window.partitionBy(*keys)).alias("__tot"),
+        )
+    )
+    if prune is not None:
+        stats = prune(stats)
+    return _join_on_keys(b, stats, [*keys, "__seg"])
 
 
 def distributed_global_rank(

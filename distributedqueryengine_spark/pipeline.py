@@ -453,14 +453,11 @@ def curate_corpus(
     else:
         # fused form (r15): one (group, bucket) aggregate carries both
         # the rate computation and the quota ranking — identical rows
-        # to temperature_mixture_rates ∘ apply_mixture_rates (pinned).
-        # lazy_quotas (r17): curation group columns are bounded source
-        # catalogs (dozens of values), so the quotas/prefixes ride the
-        # manifest plan as broadcast frames instead of a construction-
-        # time counts collect — one fewer serial sync job
+        # to temperature_mixture_rates ∘ apply_mixture_rates (pinned);
+        # quotas and prefixes ride the manifest plan, bounded by the
+        # mixture's in-plan group-count guard
         mixed = apply_temperature_mixture(
             cur, "grp", "id", temperature=temperature, seed=seed,
-            lazy_quotas=True,
         )
         if account:
             cur, n = _stage(acc, "mixture", n, mixed)

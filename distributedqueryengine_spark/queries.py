@@ -1291,12 +1291,6 @@ def q_text_wordcount_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # suite-shared token projection (tokens_col fast path)
     lm_model = train_trigram_lm(
         shared, "__norm", "doc_id", vocab_size=500, tokens_col="__toks",
-        # r17: lazy_vocab — the vocabulary never collects (zero
-        # construction jobs for the whole LM branch) and the UNK map
-        # moves from a per-token 500-literal array scan to broadcast
-        # joins on the gram count tables; counts and scores pinned
-        # identical in tests/test_lm.py
-        lazy_vocab=True,
     )
     lm = score_stupid_backoff(
         shared.filter(F.col("doc_id") % 7 == 0), "__norm", lm_model,
@@ -2361,8 +2355,7 @@ def q_lm_backoff_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _t(spark, sf_dir, "documents")
-    lm = train_trigram_lm(d, "text", "doc_id", vocab_size=500,
-                          lazy_vocab=True)  # r17: zero-collect build
+    lm = train_trigram_lm(d, "text", "doc_id", vocab_size=500)
     sub = d.filter(F.col("doc_id") % 7 == 0)
     return score_stupid_backoff(sub, "text", lm, "doc_id")
 

@@ -157,7 +157,8 @@ def _py_backoff(train_docs, score_docs, vocab_size, alpha=0.4):
 
 def test_stupid_backoff_matches_python_reference(spark):
     """Randomized differential: train on corpus A, score corpus B
-    (overlapping + novel vocab, empty docs) — every per-doc
+    (overlapping + novel vocab, empty and whitespace-only docs, tokens
+    that spell the <s>/</s>/<unk> markers) — every per-doc
     (n_trigrams, avg_neg_logscore) must match the reference, at
     several vocab cutoffs and alphas."""
     import random
@@ -169,11 +170,12 @@ def test_stupid_backoff_matches_python_reference(spark):
 
     for seed in range(4):
         rng = random.Random(seed * 7907 + 1)
-        vocab = [f"t{j}" for j in range(25)]
+        vocab = [f"t{j}" for j in range(25)] + ["<s>", "</s>", "<unk>"]
         train = {
             i: " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 25)))
             for i in range(25)
         }
+        train[25] = "  \t  "
         score = {
             100 + i: " ".join(
                 rng.choice(vocab + ["novelword", "zzz"]) for _ in range(rng.randint(0, 15))

@@ -846,7 +846,8 @@ def test_exact_percentiles_grouped_matches_builtin(spark, tables):
     statistics plan q_approx_sketches uses for its verification bounds
     since r16) must reproduce F.percentile BIT-IDENTICALLY — same
     position = p*(n-1) interpolation over the sorted multiset — on
-    grouped data with duplicates, NULLs and a single-row group."""
+    grouped data with duplicates, NULLs, a NULL group key and a
+    single-row group."""
     from distributedqueryengine_spark.operators.aggregates import (
         exact_percentiles_grouped,
     )
@@ -855,6 +856,7 @@ def test_exact_percentiles_grouped_matches_builtin(spark, tables):
     rows += [("b", float(v)) for v in [10, 20]]
     rows += [("c", 42.0)]
     rows += [("a", None), ("c", None)]
+    rows += [(None, 2.0), (None, 6.0), (None, 10.0)]
     df = spark.createDataFrame(rows, "g string, v double")
     ps = [0.0, 0.25, 0.498, 0.5, 0.902, 0.97, 1.0]
     got = {

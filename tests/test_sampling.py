@@ -468,7 +468,7 @@ def test_sample_budget_oracle_parity_with_blank_docs(spark, tmp_path):
     assert got == ref
 
 
-def test_apply_mixture_two_phase_equals_window_path(spark):
+def test_apply_mixture_bucketed_equals_window_path(spark):
     """r14: the driver-bounded two-phase mixture rank (hash-range
     sub-buckets per group — no corpus-through-#groups-tasks window)
     must return EXACTLY the window path's rows, including quota
@@ -486,11 +486,11 @@ def test_apply_mixture_two_phase_equals_window_path(spark):
         [("src0", 0.25), ("src1", 1.0), ("src2", 1.5), ("src3", 0.001)],
         "group string, rate double",
     )  # src4 absent → dropped entirely
-    two_phase = apply_mixture_rates(df, rates, "g", "id", seed=7)
+    bucketed = apply_mixture_rates(df, rates, "g", "id", seed=7)
     windowed = apply_mixture_rates(
         df, rates, "g", "id", seed=7, max_driver_groups=0
     )
-    a = sorted((r["id"], r["g"]) for r in two_phase.collect())
+    a = sorted((r["id"], r["g"]) for r in bucketed.collect())
     b = sorted((r["id"], r["g"]) for r in windowed.collect())
     assert a == b and a
     # exact quotas per group
@@ -873,27 +873,31 @@ def test_categorical_curriculum_orders_tiers(spark):
 
 
 def test_mixture_bounded_collect_fallback_protects_driver(spark):
-    """r16 ADVICE: the fused mixture's (group × bucket) counts collect
-    is LIMIT-bounded at max_driver_groups × n_buckets rows, so a
-    high-cardinality group column trips the window fallback WITHOUT
-    transferring the full count table — and the fallback's rows equal
-    the driver-table path's rows."""
+    """The fused mixture broadcasts groups × n_buckets quota rows, so
+    its group catalog is bounded by max_driver_groups inside the plan:
+    40 groups over a cap of 8 fail when the plan runs (naming the
+    high-cardinality alternative, apply_mixture_rates), and the same
+    40 groups under the default cap return the split form's rows."""
     from distributedqueryengine_spark.functions.sampling import (
+        apply_mixture_rates,
         apply_temperature_mixture,
+        temperature_mixture_rates,
     )
 
     rows = [(i, f"g{i % 40}") for i in range(400)]
     df = spark.createDataFrame(rows, "id long, src string")
-    # 40 groups > max_driver_groups=8 → bounded collect sees at most
-    # 8 × n_buckets + 1 rows and falls back to the window path
     lo = apply_temperature_mixture(
         df, "src", "id", temperature=0.7, seed=3, max_driver_groups=8
     )
-    hi = apply_temperature_mixture(
-        df, "src", "id", temperature=0.7, seed=3, max_driver_groups=1024
+    with pytest.raises(Exception, match="apply_mixture_rates"):
+        lo.collect()
+    hi = apply_temperature_mixture(df, "src", "id", temperature=0.7, seed=3)
+    rates = temperature_mixture_rates(
+        df.withColumnRenamed("src", "group"), "group", temperature=0.7
     )
-    a = sorted((r["id"], r["src"]) for r in lo.collect())
-    b = sorted((r["id"], r["src"]) for r in hi.collect())
+    split = apply_mixture_rates(df, rates, "src", "id", seed=3)
+    a = sorted((r["id"], r["src"]) for r in hi.collect())
+    b = sorted((r["id"], r["src"]) for r in split.collect())
     assert a == b and a
 
 
@@ -952,29 +956,3 @@ def test_budget_lazy_prefix_equals_collect_path(spark):
         ).collect()
     )
     assert a == b and a
-
-
-def test_mixture_lazy_quotas_equals_collect_path(spark):
-    """r17: apply_temperature_mixture(lazy_quotas=True) — quotas,
-    prefixes and rates all in-plan — returns EXACTLY the collect
-    path's rows across temperatures and seeds."""
-    from distributedqueryengine_spark.functions.sampling import (
-        apply_temperature_mixture,
-    )
-
-    rows = [(i, f"s{min(i % 10, i % 7, 3)}") for i in range(900)]
-    df = spark.createDataFrame(rows, "id long, src string")
-    for temp in (0.5, 1.0, 2.0):
-        for seed in (0, 9):
-            a = sorted(
-                (r["id"], r["src"]) for r in apply_temperature_mixture(
-                    df, "src", "id", temperature=temp, seed=seed
-                ).collect()
-            )
-            b = sorted(
-                (r["id"], r["src"]) for r in apply_temperature_mixture(
-                    df, "src", "id", temperature=temp, seed=seed,
-                    lazy_quotas=True,
-                ).collect()
-            )
-            assert a == b and a, (temp, seed)

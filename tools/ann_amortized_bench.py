@@ -13,9 +13,11 @@ Usage: python tools/ann_amortized_bench.py [corpus_rows ...]
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from distributedqueryengine_spark.annbench import ann_lifecycle  # noqa: E402
 from distributedqueryengine_spark.session import get_spark  # noqa: E402

@@ -12,9 +12,11 @@ Usage: python tools/plan_audit.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from distributedqueryengine_spark.session import get_spark  # noqa: E402

@@ -21,10 +21,12 @@ Writes SCALE_PROBE_PIPELINE_r14.json at the repo root.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -33,7 +35,7 @@ from distributedqueryengine_spark.session import get_spark  # noqa: E402
 from tools.scale_probe_pipelines import shuffle_write_bytes  # noqa: E402
 from tools.scale_probe_r13 import replicate_docs  # noqa: E402
 
-OUT = "/root/repo/SCALE_PROBE_PIPELINE_r14.json"
+OUT = os.path.join(REPO, "SCALE_PROBE_PIPELINE_r14.json")
 
 
 def main() -> None:

@@ -19,7 +19,8 @@ import sys
 import time
 
 os.environ.setdefault("SPARK_GRAFT_UI", "true")
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 

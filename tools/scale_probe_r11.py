@@ -37,7 +37,8 @@ import sys
 import time
 
 os.environ.setdefault("SPARK_GRAFT_UI", "true")
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -198,7 +199,7 @@ def main() -> None:
                 if c else "—"
             )
         print(f"| {name} | " + " | ".join(cells) + " |")
-    out_json = "/root/repo/SCALE_PROBE_r11.json"
+    out_json = os.path.join(REPO, "SCALE_PROBE_r11.json")
     merged = {}
     if os.path.isfile(out_json):  # incremental op-by-op invocations merge
         with open(out_json) as f:

@@ -21,7 +21,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -30,7 +31,7 @@ from tools.scale_probe_pipelines import shuffle_write_bytes  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
 SHIFT = 10_000_000
-OUT = "/root/repo/SCALE_PROBE_r13.json"
+OUT = os.path.join(REPO, "SCALE_PROBE_r13.json")
 
 
 def replicate_docs(spark, n: int) -> str:

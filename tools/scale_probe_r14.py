@@ -22,16 +22,18 @@ Writes SCALE_PROBE_r14.json at the repo root.
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
 from distributedqueryengine_spark.session import get_spark  # noqa: E402
 from tools.scale_probe_r13 import replicate_docs, timed  # noqa: E402
 
-OUT = "/root/repo/SCALE_PROBE_r14.json"
+OUT = os.path.join(REPO, "SCALE_PROBE_r14.json")
 
 
 def main() -> None:
@@ -87,7 +89,7 @@ def main() -> None:
 
         if n == 100:
             rates = temperature_mixture_rates(docs, "source", temperature=0.7)
-            for key, cap in (("mixture_two_phase", 1024),
+            for key, cap in (("mixture_bucketed", 1024),
                              ("mixture_group_window", 0)):
                 wall, shuf, rows = timed(
                     spark,

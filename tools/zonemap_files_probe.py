@@ -29,7 +29,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -125,7 +126,7 @@ def main() -> None:
     assert a == b, (a, b)
     out["equality"] = "pruned == full-scan filter"
 
-    with open("/root/repo/ZONEMAP_FILES_PROBE_r11.json", "w") as f:
+    with open(os.path.join(REPO, "ZONEMAP_FILES_PROBE_r11.json"), "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps(out), flush=True)
     shutil.rmtree(PATH, ignore_errors=True)
