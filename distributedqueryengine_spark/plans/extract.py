@@ -24,21 +24,26 @@ def _jvm_plan_str(df: DataFrame, attr: str) -> str | None:
         return None
 
 
-def plan_report(df: DataFrame) -> dict[str, str]:
+def plan_report(df: DataFrame, executed: DataFrame | None = None) -> dict[str, str]:
     """Return {original, optimized, physical} plan strings for a DataFrame.
 
     `original` ~ the reference's pre-optimization tree, `optimized` ~ its
     post-`AlgTreeOpt` tree (QueryService.asmx.cs:56-58), `physical` has
     no reference analogue (it never planned execution strategies).
+
+    `physical` is read from `executed` when given: the Dataset that
+    actually ran `df` (e.g. `df` under a guard limit), so the report
+    names the plan that ran without planning `df` a second time.
     """
+    ran = df if executed is None else executed
     analyzed = _jvm_plan_str(df, "analyzed")
     optimized = _jvm_plan_str(df, "optimizedPlan")
-    physical = _jvm_plan_str(df, "executedPlan")
+    physical = _jvm_plan_str(ran, "executedPlan")
     if analyzed is None:
         # Fallback: formatted explain only (still useful, never raises).
         try:
-            physical = df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[union-attr]
-                df._jdf.queryExecution(), "formatted"
+            physical = ran._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[union-attr]
+                ran._jdf.queryExecution(), "formatted"
             )
         except Exception:
             physical = "<unavailable>"

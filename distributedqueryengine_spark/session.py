@@ -10,6 +10,7 @@ tags (reference RPC.cs:102).
 Scale notes (100 TB design intent):
 - AQE on: runtime partition coalescing, skew-join splitting, and
   dynamic join-strategy switching replace any static plan choice.
+  (`service.serve` turns it off on the session it serves from.)
 - shuffle.partitions is a local-mode default only; on a real cluster
   AQE's coalescing makes the initial number far less sensitive.
 - Timezone pinned UTC so timestamp semantics are portable (and match
@@ -69,6 +70,9 @@ def get_spark(app_name: str = "distributedqueryengine-spark") -> SparkSession:
         # events.parquet stores TIMESTAMP(NANOS); Spark has no nanos
         # timestamp type, so read as long and convert in load_table.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Reliable checkpoint() dirs (pipeline._stage on a cluster) are
+        # deleted once their RDD is garbage-collected, not left behind.
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
         builder = builder.master(f"local[{cpus}]")

@@ -4,7 +4,29 @@ result restored and real statistics)."""
 
 from __future__ import annotations
 
+import contextlib
+
 from distributedqueryengine_spark.api import bootstrap, query
+
+SF_DIR = "/root/testdata/sf0.001"
+
+
+@contextlib.contextmanager
+def _served(spark):
+    """Serve a dedicated session (`serve` sets its own confs on the
+    session it is handed, so the shared `spark` fixture keeps AQE on);
+    yields the port, then stops the service and closes its socket."""
+    from distributedqueryengine_spark.service import serve
+    from distributedqueryengine_spark.session import register_tables
+
+    session = spark.newSession()
+    register_tables(session, SF_DIR)
+    server = serve(session)
+    try:
+        yield server.server_address[1]
+    finally:
+        server.shutdown()
+        server.server_close()
 
 
 def test_query_contract(spark, tables):
@@ -52,6 +74,56 @@ def test_query_limit_guard(spark, tables):
     assert res["statistics"]["truncated"]
 
 
+def test_query_reports_the_plan_that_ran(spark, tables, monkeypatch):
+    """`physical_plan` is the executed plan of the one Dataset
+    `api.query` collected, guard limit included; the logical plans stay
+    the user's query without it."""
+    cls = type(spark.range(1))
+    collected = []
+    real_collect = cls.collect
+
+    def spy(self):
+        collected.append(self)
+        return real_collect(self)
+
+    monkeypatch.setattr(cls, "collect", spy)
+    res = query(spark, "SELECT o_orderkey, o_totalprice FROM orders", collect_limit=7)
+    assert len(collected) == 1
+    assert res["physical_plan"] == str(collected[0]._jdf.queryExecution().executedPlan())
+    assert "CollectLimit" in res["physical_plan"]
+    assert "Limit" not in res["original_plan"]
+    assert "Limit" not in res["optimized_plan"]
+
+    ordered = query(spark, "SELECT o_orderkey FROM orders ORDER BY o_totalprice", collect_limit=7)
+    assert "TakeOrderedAndProject" in ordered["physical_plan"]
+    assert len(collected) == 2
+
+
+def test_query_statistics_count_jobs(spark, tables):
+    """`statistics` counts the Spark jobs a request ran, splits its
+    time, and leaves a job group the caller set in place (the jobs also
+    land in that group)."""
+    sc = spark.sparkContext
+    point = query(spark, "SELECT c_name FROM customer WHERE c_custkey = :k", args={"k": 5})
+    sc.setJobGroup("api-caller", "test")
+    try:
+        join = query(
+            spark,
+            """SELECT c_mktsegment, count(*) AS n FROM customer
+               JOIN orders ON c_custkey = o_custkey GROUP BY c_mktsegment""",
+        )
+        assert sc.getLocalProperty("spark.jobGroup.id") == "api-caller"
+        assert len(sc.statusTracker().getJobIdsForGroup("api-caller")) == join["statistics"]["jobs"]
+    finally:
+        sc._jsc.clearJobGroup()
+    assert not sc.getJobTags()
+    assert join["statistics"]["jobs"] > point["statistics"]["jobs"] >= 1
+    for st in (point["statistics"], join["statistics"]):
+        parts = st["sql_s"] + st["execute_s"] + st["plan_s"]
+        assert min(st["sql_s"], st["execute_s"], st["plan_s"]) >= 0
+        assert abs(parts - st["wall_seconds"]) < 1e-3
+
+
 def test_register_python_udf_in_sql(spark, tables):
     """SQL-visible Python UDF registration (the documented slow path —
     row-at-a-time; exists for API completeness, never in engine
@@ -78,14 +150,9 @@ def test_http_service_roundtrip(spark):
     plans + statistics out."""
     import json
     import urllib.request
+    from urllib.parse import quote
 
-    from distributedqueryengine_spark import service
-    from distributedqueryengine_spark.session import register_tables
-
-    register_tables(spark, "/root/testdata/sf0.001")
-    server = service.serve(spark)
-    try:
-        port = server.server_address[1]
+    with _served(spark) as port:
         # health
         with urllib.request.urlopen(f"http://127.0.0.1:{port}/health") as r:
             assert json.load(r)["status"] == "ok"
@@ -106,6 +173,14 @@ def test_http_service_roundtrip(spark):
         assert out["original_plan"] != "<unavailable>"
         assert out["optimized_plan"] != "<unavailable>"
         assert out["statistics"]["row_count"] == 3
+        assert "TakeOrderedAndProject" in out["physical_plan"]
+        # the service session runs without AQE: a query with an exchange
+        # reports the static plan that ran, guard limit on top
+        grouped = quote("SELECT n_regionkey, count(*) AS n FROM nation GROUP BY n_regionkey")
+        with urllib.request.urlopen(f"http://127.0.0.1:{port}/query?sql={grouped}") as r:
+            plan = json.load(r)["physical_plan"]
+        assert "Exchange" in plan and "CollectLimit" in plan
+        assert "AdaptiveSparkPlan" not in plan
         # GET with error surfaces as 400, not a hung socket
         import urllib.error
         try:
@@ -113,8 +188,8 @@ def test_http_service_roundtrip(spark):
             raise AssertionError("expected HTTP 400")
         except urllib.error.HTTPError as e:
             assert e.code == 400
-    finally:
-        server.shutdown()
+    # serve() configured its own session, not the shared fixture
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
 def test_run_with_metrics_single_pass_observation(spark, tables):
@@ -182,20 +257,13 @@ def test_parameterized_query_binds_typed_values(spark, tables):
     assert hostile["rows"][0]["n"] == 0  # bound as a value, not parsed
 
 
-def test_service_accepts_bound_parameters(spark, tables):
+def test_service_accepts_bound_parameters(spark):
     """The HTTP /query endpoint passes `args` through to the
     parameterized-SQL path."""
     import json as _json
-    import threading
     import urllib.request
 
-    from distributedqueryengine_spark.service import serve
-
-    httpd = serve(spark, port=0)
-    port = httpd.server_address[1]
-    t = threading.Thread(target=httpd.serve_forever, daemon=True)
-    t.start()
-    try:
+    with _served(spark) as port:
         body = _json.dumps(
             {
                 "sql": "SELECT count(*) AS n FROM orders WHERE o_totalprice > :p",
@@ -211,11 +279,9 @@ def test_service_accepts_bound_parameters(spark, tables):
         with urllib.request.urlopen(req, timeout=60) as resp:
             payload = _json.loads(resp.read())
         assert payload["rows"][0]["n"] > 0
-    finally:
-        httpd.shutdown()
 
 
-def test_service_handles_concurrent_queries(spark, tables):
+def test_service_handles_concurrent_queries(spark):
     """ThreadingHTTPServer + a shared SparkSession: four concurrent
     /query POSTs must all succeed with correct, independent results
     (SparkSession is thread-safe; this pins that the service layer
@@ -224,15 +290,10 @@ def test_service_handles_concurrent_queries(spark, tables):
     import threading
     import urllib.request
 
-    from distributedqueryengine_spark.service import serve
-
-    httpd = serve(spark, port=0)
-    port = httpd.server_address[1]
-    threading.Thread(target=httpd.serve_forever, daemon=True).start()
     results: dict[int, int] = {}
     errors: list[Exception] = []
 
-    def hit(qty: int) -> None:
+    def hit(port: int, qty: int) -> None:
         try:
             body = _json.dumps(
                 {
@@ -250,18 +311,17 @@ def test_service_handles_concurrent_queries(spark, tables):
         except Exception as e:  # surface in the main thread
             errors.append(e)
 
-    try:
-        threads = [threading.Thread(target=hit, args=(q,)) for q in (10, 20, 30, 40)]
+    with _served(spark) as port:
+        threads = [threading.Thread(target=hit, args=(port, q)) for q in (10, 20, 30, 40)]
         for t in threads:
             t.start()
         for t in threads:
             t.join(timeout=180)
+        assert not any(t.is_alive() for t in threads)
         assert not errors, errors
         assert set(results) == {10, 20, 30, 40}
         # monotone thresholds ⇒ monotone counts: results are independent
         assert results[10] < results[20] < results[30] < results[40]
-    finally:
-        httpd.shutdown()
 
 
 def test_plan_tree_roundtrips_for_every_inventory_query(spark):

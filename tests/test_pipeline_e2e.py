@@ -417,3 +417,12 @@ def test_stage_reliable_checkpoint_on_cluster(spark, tmp_path, monkeypatch):
     for _root, _dirs, files in os.walk(ckdir):
         found.extend(files)
     assert found, "no reliable checkpoint files written"
+
+
+def test_get_spark_cleans_reliable_checkpoints(spark):
+    """The reliable checkpoint dirs _stage writes on a cluster are
+    deleted once their RDD is garbage-collected."""
+    from distributedqueryengine_spark.session import get_spark
+
+    conf = get_spark().sparkContext.getConf()
+    assert conf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true"
