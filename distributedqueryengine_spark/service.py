@@ -11,9 +11,12 @@ for short parameterized queries (AQE and whole-stage codegen off).
 
 Endpoints:
 - POST /query   body {"sql": "...", "limit": N?} → full api.query dict
-- GET  /query?sql=...                            → same
+- GET  /query?sql=...&limit=N                    → same
 - GET  /health                                   → {"status": "ok"}
 - GET  /                                         → plan-tree UI (HTML)
+
+`limit` (default and ceiling `MAX_LIMIT`) bounds the rows a request
+brings back to the driver; a request asking for more gets HTTP 400.
 
 The / page is the index.js parity surface: it submits SQL, renders the
 original vs optimized plan trees side by side (nested lists instead of
@@ -37,6 +40,8 @@ from pyspark.sql import SparkSession
 
 from distributedqueryengine_spark import api
 
+# The most rows one request may collect to the driver, and the default.
+MAX_LIMIT = 10_000
 
 _INDEX_HTML = """<!doctype html>
 <html><head><meta charset="utf-8"><title>distributedqueryengine-spark</title>
@@ -102,9 +107,17 @@ def _make_handler(spark: SparkSession):
             self.end_headers()
             self.wfile.write(body)
 
-        def _run(self, sql: str, limit: int, args=None) -> None:
+        def _run(self, sql: str, limit, args=None) -> None:
             if not sql:
                 self._send(400, {"error": "missing sql"})
+                return
+            try:
+                limit = int(limit)
+            except (TypeError, ValueError):
+                self._send(400, {"error": f"limit must be an integer, got {limit!r}"})
+                return
+            if not 0 <= limit <= MAX_LIMIT:
+                self._send(400, {"error": f"limit must be between 0 and {MAX_LIMIT}, got {limit}"})
                 return
             try:
                 self._send(200, api.query(spark, sql, collect_limit=limit, args=args))
@@ -127,8 +140,7 @@ def _make_handler(spark: SparkSession):
             if url.path == "/query":
                 q = parse_qs(url.query)
                 sql = (q.get("sql") or [""])[0]
-                limit = int((q.get("limit") or ["10000"])[0])
-                self._run(sql, limit)
+                self._run(sql, (q.get("limit") or [MAX_LIMIT])[0])
                 return
             self._send(404, {"error": "unknown path"})
 
@@ -144,7 +156,7 @@ def _make_handler(spark: SparkSession):
                 return
             self._run(
                 payload.get("sql", ""),
-                int(payload.get("limit", 10_000)),
+                payload.get("limit", MAX_LIMIT),
                 args=payload.get("args"),
             )
 

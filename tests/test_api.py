@@ -281,6 +281,48 @@ def test_service_accepts_bound_parameters(spark):
         assert payload["rows"][0]["n"] > 0
 
 
+def test_service_caps_the_row_limit(spark):
+    """A request may not collect more than `service.MAX_LIMIT` rows: a
+    larger `limit` is a 400 naming the ceiling, on GET and on POST; a
+    limit at or under it is served."""
+    import json as _json
+    import urllib.error
+    import urllib.request
+    from urllib.parse import quote
+
+    from distributedqueryengine_spark.service import MAX_LIMIT
+
+    sql = "SELECT l_orderkey FROM lineitem"
+
+    def get(port, limit):
+        return urllib.request.Request(
+            f"http://127.0.0.1:{port}/query?sql={quote(sql)}&limit={limit}"
+        )
+
+    def post(port, limit):
+        return urllib.request.Request(
+            f"http://127.0.0.1:{port}/query",
+            data=_json.dumps({"sql": sql, "limit": limit}).encode(),
+            headers={"Content-Type": "application/json"},
+        )
+
+    def rejected(req) -> str:
+        try:
+            urllib.request.urlopen(req, timeout=60)
+        except urllib.error.HTTPError as e:
+            assert e.code == 400
+            return _json.loads(e.read())["error"]
+        raise AssertionError(f"{req.full_url}: expected HTTP 400")
+
+    with _served(spark) as port:
+        for make in (get, post):
+            for bad in (MAX_LIMIT + 1, 100_000_000, -1):
+                assert str(MAX_LIMIT) in rejected(make(port, bad))
+            assert "integer" in rejected(make(port, "many"))
+            with urllib.request.urlopen(make(port, 100), timeout=60) as r:
+                assert _json.load(r)["statistics"]["row_count"] == 100
+
+
 def test_service_handles_concurrent_queries(spark):
     """ThreadingHTTPServer + a shared SparkSession: four concurrent
     /query POSTs must all succeed with correct, independent results
