@@ -7,7 +7,7 @@ rendered by the jointjs UI in index.js:1-122). This wrapper exposes the
 same contract over stdlib http.server — no framework dependencies —
 backed by `api.query`, which additionally returns the result rows the
 reference discarded and real statistics. `serve` sets its session up
-for short parameterized queries (AQE and whole-stage codegen off).
+for short parameterized queries (AQE off, expressions interpreted).
 
 Endpoints:
 - POST /query   body {"sql": "...", "limit": N?} → full api.query dict
@@ -17,6 +17,12 @@ Endpoints:
 
 `limit` (default and ceiling `MAX_LIMIT`) bounds the rows a request
 brings back to the driver; a request asking for more gets HTTP 400.
+A query Spark rejects or fails (a `PySparkException`: parse, analysis,
+bad `args`, or an error raised while it runs) gets HTTP 400 with
+`{"error": message, "error_class": Spark's error condition}`; any
+other exception is the service's fault and gets HTTP 500. A body that
+is not a JSON object, or whose `sql` is not a non-empty string, gets
+HTTP 400.
 
 The / page is the index.js parity surface: it submits SQL, renders the
 original vs optimized plan trees side by side (nested lists instead of
@@ -36,12 +42,20 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
+from pyspark.errors import PySparkException
 from pyspark.sql import SparkSession
 
 from distributedqueryengine_spark import api
 
 # The most rows one request may collect to the driver, and the default.
 MAX_LIMIT = 10_000
+
+# The confs `serve` sets on the session it serves (see `serve`).
+SESSION_CONFS = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.codegen.wholeStage": "false",
+    "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+}
 
 _INDEX_HTML = """<!doctype html>
 <html><head><meta charset="utf-8"><title>distributedqueryengine-spark</title>
@@ -108,8 +122,8 @@ def _make_handler(spark: SparkSession):
             self.wfile.write(body)
 
         def _run(self, sql: str, limit, args=None) -> None:
-            if not sql:
-                self._send(400, {"error": "missing sql"})
+            if not sql or not isinstance(sql, str):
+                self._send(400, {"error": f"sql must be a non-empty string, got {sql!r}"})
                 return
             try:
                 limit = int(limit)
@@ -121,8 +135,10 @@ def _make_handler(spark: SparkSession):
                 return
             try:
                 self._send(200, api.query(spark, sql, collect_limit=limit, args=args))
-            except Exception as e:  # surface analysis errors as 400s
-                self._send(400, {"error": str(e)})
+            except PySparkException as e:  # the request's fault: parse, analysis, args, runtime
+                self._send(400, {"error": str(e), "error_class": e.getCondition()})
+            except Exception as e:  # the service's fault
+                self._send(500, {"error": f"{type(e).__name__}: {e}"})
 
         def do_GET(self) -> None:  # noqa: N802 (http.server API)
             url = urlparse(self.path)
@@ -154,6 +170,9 @@ def _make_handler(spark: SparkSession):
             except json.JSONDecodeError:
                 self._send(400, {"error": "invalid JSON body"})
                 return
+            if not isinstance(payload, dict):
+                self._send(400, {"error": "the JSON body must be an object"})
+                return
             self._run(
                 payload.get("sql", ""),
                 payload.get("limit", MAX_LIMIT),
@@ -172,8 +191,8 @@ def serve(spark: SparkSession, host: str = "127.0.0.1", port: int = 0) -> Thread
     `server.shutdown()` and then `server.server_close()` to stop.
 
     The service takes over `spark`: every request is a short,
-    parameterized, LIMIT-bounded query, so `serve` sets two session
-    confs on it for that shape of work:
+    parameterized, LIMIT-bounded query, so `serve` sets the session
+    confs in `SESSION_CONFS` on it for that shape of work:
     - `spark.sql.adaptive.enabled=false`: AQE runs each exchange as its
       own job and re-plans after it; on a small request that is one more
       job per exchange (a two-join top-k runs 4 jobs with it, 3 without).
@@ -183,11 +202,27 @@ def serve(spark: SparkSession, host: str = "127.0.0.1", port: int = 0) -> Thread
       collect at sf0.01 on 4 vCPUs took 27 ms with a repeated literal
       and 36 ms with a new one; without whole-stage codegen, 21 and
       25 ms.
+    - `spark.sql.codegen.factoryMode=NO_CODEGEN`: without whole-stage
+      codegen, predicates and projections are still generated one
+      expression tree at a time, with the bound literals inlined, so
+      each new value still compiled a class with Janino and then
+      JIT-compiled it for one use (20 compiles for 20 point lookups).
+      With this conf they take Spark's interpreted implementations and
+      a request compiles nothing. Under two clients sending the
+      perfbench templates at sf0.01 on 4 vCPUs, the JVM's CPU per
+      request fell from 104-115 to 71-82 ms in the first 20 s after
+      start (JIT compiler and task threads) and from 43 to 36 ms once
+      warm. The catch: interpreted expressions are slower per row (a
+      600k-row grouped sum: 426 ms against 226 ms with only whole-stage
+      codegen off), so a large scan belongs on the batch path, not on
+      this service. Spark documents this conf as internal ("not
+      supposed to be set by end users"); `tests/test_api.py` pins that
+      Spark still honours it, so an upgrade that drops it fails there.
     Run batch work in another session (`spark.newSession()` shares the
     SparkContext and keeps its own confs); it keeps AQE and codegen.
     """
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    for key, value in SESSION_CONFS.items():
+        spark.conf.set(key, value)
     server = ThreadingHTTPServer((host, port), _make_handler(spark))
     t = threading.Thread(target=server.serve_forever, daemon=True)
     t.start()

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import contextlib
 
+import pytest
+
 from distributedqueryengine_spark.api import bootstrap, query
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -190,6 +192,111 @@ def test_http_service_roundtrip(spark):
             assert e.code == 400
     # serve() configured its own session, not the shared fixture
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def _post(port: int, body: dict) -> tuple[int, dict]:
+    """POST /query; (HTTP status, JSON reply), error replies included."""
+    import json
+    import urllib.error
+    import urllib.request
+
+    req = urllib.request.Request(
+        f"http://127.0.0.1:{port}/query",
+        data=json.dumps(body).encode(),
+        headers={"Content-Type": "application/json"},
+    )
+    try:
+        with urllib.request.urlopen(req, timeout=60) as r:
+            return r.status, json.load(r)
+    except urllib.error.HTTPError as e:
+        return e.code, json.loads(e.read())
+
+
+@pytest.mark.parametrize(
+    "body, error_class",
+    [
+        ({"sql": "SELECT bogus FROM nowhere"}, "TABLE_OR_VIEW_NOT_FOUND"),
+        ({"sql": "SELEC n_name FROM nation"}, "PARSE_SYNTAX_ERROR"),
+        ({"sql": "SELECT n_name FROM nation WHERE n_nationkey = :k", "args": 5}, "INVALID_TYPE"),
+        ({"sql": "SELECT n_name, 1 / (n_nationkey - n_nationkey) AS x FROM nation"}, "DIVIDE_BY_ZERO"),
+        ({"sql": "SELECT :x AS v", "args": {"x": {"a": 1}}}, "UNSUPPORTED_FEATURE.LITERAL_TYPE"),
+    ],
+    ids=["analysis", "parse", "args", "runtime", "arg-value"],
+)
+def test_service_names_the_error_class(spark, body, error_class):
+    """A query Spark rejects or fails (parse, analysis, bad `args`, an
+    error raised while it runs) is the request's fault: HTTP 400 whose
+    `error_class` is Spark's error condition."""
+    with _served(spark) as port:
+        status, reply = _post(port, body)
+    assert status == 400
+    assert reply["error_class"] == error_class
+    assert error_class in reply["error"]
+
+
+def test_service_answers_its_own_faults_with_500(spark, monkeypatch):
+    """An exception that is not Spark's verdict on the query is the
+    service's fault: HTTP 500, not a 400 that blames the request."""
+    from distributedqueryengine_spark import service
+
+    def broken(*args, **kwargs):
+        raise RuntimeError("lost the session")
+
+    with _served(spark) as port:
+        monkeypatch.setattr(service.api, "query", broken)
+        status, reply = _post(port, {"sql": "SELECT n_name FROM nation"})
+    assert status == 500
+    assert reply == {"error": "RuntimeError: lost the session"}
+
+
+def test_service_rejects_malformed_bodies(spark):
+    """A JSON body that is not an object, or whose `sql` is not a
+    non-empty string, is the request's fault: 400, never 500."""
+    with _served(spark) as port:
+        for sql in (5, None, "", ["SELECT 1"]):
+            status, reply = _post(port, {"sql": sql})
+            assert status == 400 and "sql must be a non-empty string" in reply["error"], sql
+        for body in (["SELECT 1"], "SELECT 1", 5):
+            status, reply = _post(port, body)
+            assert status == 400 and "must be an object" in reply["error"], body
+
+
+def _compiles(spark) -> int:
+    """Classes Spark's code generator has compiled in this JVM so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_served_session_compiles_nothing_per_bound_value(spark):
+    """Binding turns `:k` into a literal, and generated code inlines
+    numeric literals, so with codegen every new key compiles a class.
+    `serve` makes its session evaluate expressions interpreted
+    (`spark.sql.codegen.factoryMode=NO_CODEGEN`, an internal Spark
+    conf): 20 lookups with new keys compile nothing there, and more
+    than nothing on a session with only AQE and whole-stage codegen
+    off. This fails if a Spark upgrade stops honouring the conf."""
+    from distributedqueryengine_spark.service import serve
+    from distributedqueryengine_spark.session import register_tables
+
+    served, control = spark.newSession(), spark.newSession()
+    server = serve(served)
+    server.shutdown()
+    server.server_close()
+    control.conf.set("spark.sql.adaptive.enabled", "false")
+    control.conf.set("spark.sql.codegen.wholeStage", "false")
+    sql = "SELECT c_custkey, c_name, c_acctbal FROM customer WHERE c_custkey = :k"
+
+    def compiles_over(session, first_key: int) -> int:
+        before = _compiles(spark)
+        for k in range(first_key, first_key + 20):
+            assert query(session, sql, args={"k": k})["statistics"]["row_count"] <= 1
+        return _compiles(spark) - before
+
+    for session in (served, control):
+        register_tables(session, SF_DIR)
+        query(session, sql, args={"k": 1})  # classes no literal changes
+    assert compiles_over(served, 7_100_001) == 0
+    assert compiles_over(control, 7_200_001) > 0
 
 
 def test_run_with_metrics_single_pass_observation(spark, tables):
