@@ -198,9 +198,9 @@ def main() -> None:
         if sizes:
             here = os.path.dirname(os.path.abspath(__file__))
             proc = subprocess.run(
-                [sys.executable, os.path.join(here, "tools", "ann_build_probe.py"),
+                [sys.executable, "-m", "distributedqueryengine_spark.annbench",
                  sf_dir, *sizes],
-                capture_output=True, text=True, timeout=1200,
+                capture_output=True, text=True, timeout=1200, cwd=here,
             )
             fresh = json.loads(proc.stdout.strip().splitlines()[-1])
             for res in (ann, ann10):

@@ -12,11 +12,18 @@ the matmul dominates Spark's fixed per-query overhead.
 
 Used by `tools/ann_amortized_bench.py` (CLI, markdown table) and by
 `bench.py` (compact run recorded into the per-round BENCH json).
+
+Run as ``python -m distributedqueryengine_spark.annbench SF_DIR
+CORPUS_ROWS...`` it times ONLY the IVF train+build in a fresh JVM and
+prints one JSON line keyed by corpus rows — bench.py's canonical
+``build_ivf_s``.
 """
 
 from __future__ import annotations
 
+import json
 import math
+import sys
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,14 +37,15 @@ from distributedqueryengine_spark.functions.similarity import (
     probe_lsh_index,
     train_ivf_centroids,
 )
-from distributedqueryengine_spark.session import load_table
+from distributedqueryengine_spark.session import get_spark, load_table
 
 _ID_SHIFT = 10_000_000
 
 
 def _replicate(df: DataFrame, n: int, id_col: str) -> DataFrame:
     """n key-shifted copies: ids stay unique, content repeats (same
-    scheme as tools/scale_probe.py — near-dup density scales too)."""
+    scheme as the SCALE_PROBE_r1*.json replicas — near-dup density
+    scales too)."""
     if n <= 1:
         return df
     copies = F.explode(F.sequence(F.lit(0), F.lit(n - 1))).alias("rep")
@@ -71,7 +79,7 @@ def ivf_build_probe(
 ) -> dict:
     """Time ONLY the IVF train+build over a ~corpus_rows replica —
     identical sizing/partitioning to ann_lifecycle. Run in a FRESH JVM
-    (tools/ann_build_probe.py) this is the canonical build number: the
+    (this module's ``__main__``) this is the canonical build number: the
     in-session build wall moved 2.5-3x with the memory pressure of
     whatever ran before it in the bench session (r12 verdict item 4),
     while probe/brute timings are stable — so bench.py records the
@@ -267,3 +275,28 @@ def ann_lifecycle(
     ivf_idx.unpersist()
     corpus.unpersist()
     return result
+
+
+def _fresh_jvm_build_main(args: list[str]) -> None:
+    sf_dir, sizes = args[0], [int(a) for a in args[1:]]
+    spark = get_spark("ann-build")
+    # warm-up AT THE LARGEST TARGET SIZE: a tiny warm-up absorbs JVM
+    # start + python-UDF spinup but not the large-scale path (JIT for
+    # the bigger loops, Arrow batch sizing, page cache) — measured:
+    # the first 1.3M build in a JVM runs ~13s, every later one ~7.5s.
+    ivf_build_probe(spark, sf_dir, corpus_rows=max(sizes))
+    out = {}
+    for rows in sizes:
+        # min-of-3: single-shot build walls on a shared box spread
+        # ~1.5x (driver-side k-means matmul vs GC/page-cache state);
+        # all raw runs are recorded for transparency.
+        runs = [ivf_build_probe(spark, sf_dir, corpus_rows=rows) for _ in range(3)]
+        best = min(runs, key=lambda r: r["build_ivf_s"])
+        best["build_runs_s"] = [r["build_ivf_s"] for r in runs]
+        out[str(best["corpus_rows"])] = best
+    print(json.dumps(out))
+    spark.stop()
+
+
+if __name__ == "__main__":
+    _fresh_jvm_build_main(sys.argv[1:])

@@ -489,106 +489,6 @@ def _staged_near_duplicates(
     return cross.unionByName(within)
 
 
-def build_band_index(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    ngram: int = 3,
-    num_perm: int = 32,
-    bands: int = 8,
-    portable: bool = False,
-) -> DataFrame:
-    """(id, band, bh) LSH band index for a corpus — the thing a
-    production pipeline persists (bucketed by (band, bh)) so later
-    increments dedup against the corpus WITHOUT rescanning it.
-    Composition of shingles → minhash_signatures → band_buckets with
-    one parameter set; pass the same params to
-    incremental_near_duplicates or the index is meaningless."""
-    sh = shingles(df, id_col, text_col, ngram, portable=portable)
-    sigs = minhash_signatures(sh, num_perm, portable=portable)
-    return band_buckets(sigs, num_perm, bands, portable=portable)
-
-
-def incremental_near_duplicates(
-    new_docs: DataFrame,
-    corpus_docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    band_index: DataFrame | None = None,
-    ngram: int = 3,
-    num_perm: int = 32,
-    bands: int = 8,
-    min_jaccard: float = 0.5,
-    portable: bool = False,
-) -> DataFrame:
-    """Near-duplicate pairs INVOLVING an arriving increment: new↔corpus
-    and new↔new, WITHOUT re-processing the corpus — the shape a 100 TB
-    pipeline actually runs (the full-corpus self-join happens once;
-    every later ingest batch probes the persisted index).
-
-    Cost profile: shingle/sign/band the increment only (O(new rows)),
-    equi-join its bands against the prebuilt `band_index` (candidates
-    only — the index side is bucket-pruned by the join keys), then
-    exact-Jaccard verification re-shingles ONLY the corpus documents
-    that appear in a candidate pair (left-semi restriction; candidates
-    ≪ corpus is the LSH contract). Nothing touches non-candidate
-    corpus rows.
-
-    `band_index` is build_band_index(corpus_docs, ...) — pass the
-    persisted frame; if None it is computed here (correct but forfeits
-    the amortization). Ids must be unique ACROSS new_docs ∪
-    corpus_docs. Returns (id_a, id_b, jaccard) with corpus ids on the
-    `id_a` side for new↔corpus pairs and id_a < id_b for new↔new —
-    equal, restricted to pairs touching a new id, to what
-    minhash_near_duplicates would emit over the unioned corpus.
-    """
-    sh_new = _scoped_persist(
-        shingles(new_docs, id_col, text_col, ngram, portable=portable)
-    )
-    sigs_new = minhash_signatures(sh_new, num_perm, portable=portable)
-    bands_new = _scoped_persist(
-        band_buckets(sigs_new, num_perm, bands, portable=portable)
-    )
-    if band_index is None:
-        band_index = build_band_index(
-            corpus_docs, id_col, text_col, ngram, num_perm, bands, portable
-        )
-
-    # new ↔ corpus: probe the prebuilt index on (band, bh)
-    cross = (
-        band_index.alias("old")
-        .join(
-            bands_new.alias("new"),
-            (F.col("old.band") == F.col("new.band"))
-            & (F.col("old.bh") == F.col("new.bh")),
-        )
-        .select(F.col("old.id").alias("id_a"), F.col("new.id").alias("id_b"))
-        .distinct()
-    )
-    # new ↔ new: self-join within the increment (an ingest batch can
-    # contain its own duplicates; the full-corpus pipeline would see
-    # these, so the incremental one must too)
-    a, b = bands_new.alias("a"), bands_new.alias("b")
-    intra = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    pairs = cross.unionByName(intra)
-
-    # verification shingles: increment + candidate corpus docs ONLY
-    cand_old = pairs.select(F.col("id_a").alias(id_col)).distinct()
-    corpus_cand = corpus_docs.join(cand_old, on=id_col, how="left_semi")
-    sh_old = shingles(corpus_cand, id_col, text_col, ngram, portable=portable)
-    scored = jaccard_on_pairs(pairs, sh_new.unionByName(sh_old))
-    return scored.filter(F.col("jaccard") >= min_jaccard)
-
-
 # -------------------------------------------------------------- SimHash
 
 def simhash(

@@ -1392,122 +1392,6 @@ def mean_embedding(
     )
 
 
-# ------------------------------------------------ late interaction (MaxSim)
-
-def maxsim_topk(
-    queries: DataFrame,
-    docs: DataFrame,
-    k: int,
-    query_id_col: str = "query_id",
-    doc_id_col: str = "doc_id",
-    vecs_col: str = "token_vecs",
-    query_limit: int = 10_000,
-) -> DataFrame:
-    """ColBERT-style late-interaction retrieval: each query and document
-    is a BAG of token vectors (`vecs_col`: array<array<double>>), and
-    score(q, d) = Σ over q's tokens of max over d's tokens of cosine —
-    the multi-vector scoring that beats single-vector dot products on
-    long documents because every query token finds its own best-matching
-    passage token. Output: (query_id, doc_id, score, rnk<=k) per query.
-
-    Scale shape mirrors brute_force_topk: the query side is
-    broadcast-small BY CONTRACT (collected once, each token matrix
-    L2-normalized, guarded by `query_limit`); the doc side streams
-    through ONE mapInPandas pass — per document a single
-    (q_tokens × dim) @ (dim × d_tokens) BLAS matmul, row-max, sum —
-    emitting only partition-local top-k (id, score) rows, never
-    vectors; a final window keeps the global top-k. The per-doc Python
-    loop is the justified-UDF case: variable-length token bags defeat
-    fixed-shape Column expressions, and each iteration is a BLAS call,
-    not interpreted arithmetic."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-    from pyspark.sql.window import Window
-
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    # Id field types follow the INPUT schemas (string doc ids are the
-    # common corpus case) — hardcoding long here broke Arrow conversion.
-    qid_type = queries.schema[query_id_col].dataType
-    did_type = docs.schema[doc_id_col].dataType
-    local_schema = StructType(
-        [
-            StructField("qid", qid_type),
-            StructField("did", did_type),
-            StructField("score", DoubleType()),
-        ]
-    )
-    qrows = queries.select(query_id_col, vecs_col).limit(query_limit + 1).collect()
-    if len(qrows) > query_limit:
-        raise ValueError(
-            f"query set exceeds query_limit={query_limit}; maxsim broadcasts "
-            "the query side by contract — raise the limit only with executor "
-            "memory to match"
-        )
-    if not qrows:
-        empty_schema = StructType(
-            [
-                StructField(query_id_col, qid_type),
-                StructField(doc_id_col, did_type),
-                StructField("score", DoubleType()),
-                StructField("rnk", IntegerType()),
-            ]
-        )
-        return docs.sparkSession.createDataFrame([], empty_schema)
-    q_ids, q_mats = [], []
-    for r in qrows:
-        m = np.asarray(list(r[1]), dtype=np.float64)
-        m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        q_ids.append(r[0])
-        q_mats.append(m)
-
-    def score(batches):
-        for pdf in batches:
-            out_q, out_d, out_s = [], [], []
-            for did, vecs in zip(pdf[doc_id_col], pdf[vecs_col]):
-                d = np.asarray(list(vecs), dtype=np.float64)
-                if d.size == 0:
-                    continue
-                d /= np.maximum(np.linalg.norm(d, axis=1, keepdims=True), 1e-12)
-                dt = d.T
-                for qid, qm in zip(q_ids, q_mats):
-                    s = float((qm @ dt).max(axis=1).sum())
-                    out_q.append(qid)
-                    out_d.append(did)
-                    out_s.append(round(s, 6))
-            if out_q:
-                df_local = pd.DataFrame(
-                    {"qid": out_q, "did": out_d, "score": out_s}
-                )
-                # partition-local top-k per query before anything shuffles
-                df_local = (
-                    df_local.sort_values(["qid", "score", "did"], ascending=[True, False, True])
-                    .groupby("qid", sort=False)
-                    .head(k)
-                )
-                yield df_local
-
-    local = docs.select(doc_id_col, vecs_col).mapInPandas(score, local_schema)
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("did").asc())
-    return (
-        local.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= k)
-        .select(
-            F.col("qid").alias(query_id_col),
-            F.col("did").alias(doc_id_col),
-            "score",
-            "rnk",
-        )
-    )
-
-
 def mine_hard_negatives(
     queries: DataFrame,
     corpus: DataFrame,

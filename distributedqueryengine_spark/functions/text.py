@@ -875,78 +875,6 @@ def oov_stats(
     )
 
 
-# ------------------------------------------------------- TF-IDF ranking
-
-def tfidf_top_terms(
-    df: DataFrame,
-    text_col: str,
-    id_col: str = "doc_id",
-    k: int = 5,
-    min_df: int = 1,
-    use_bpe_pretokens: bool = False,
-) -> DataFrame:
-    """(doc id, term, tf, df, tfidf, rnk): each document's top-`k`
-    terms by TF-IDF — the classic keyword-extraction / relevance
-    substrate (and the sparse sibling of the embedding similarity in
-    similarity.py). No analogue in the reference (scalar-only engine,
-    RPC.cs:20-28).
-
-    Formula (SQL-portable, so the whole operator is DuckDB-
-    differentiable): tf = raw term count in the doc, idf =
-    ln((1 + N) / (1 + df)) + 1 (the smoothed variant — never zero or
-    negative, defined even when a term is in every doc), tfidf =
-    tf * idf. `min_df` prunes hapax noise before ranking. Ties rank
-    deterministically (tfidf DESC, term ASC).
-
-    Scale shape: the corpus text is tokenized EXACTLY ONCE — one
-    explode + map-side-combinable (doc, term) count; document
-    frequency is a count window over that per-doc table partitioned by
-    term (the rows are distinct (doc, term) pairs by construction, so
-    the window count IS df — no second tokenize pass, no vocab join);
-    N is a 1-row aggregate folded in via a broadcast cross join (no
-    driver collect); top-k per doc is a row_number window that Spark
-    executes as WindowGroupLimit (per-partition top-k pushdown, never
-    a full per-doc sort spill). Every post-explode stage is
-    token-table-sized or smaller, never corpus-text-sized.
-    """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if min_df < 1:
-        raise ValueError(f"min_df must be >= 1, got {min_df}")
-    from pyspark.sql.window import Window
-
-    toks = regex_tokens(text_col) if use_bpe_pretokens else tokens(text_col)
-    per_doc = (
-        df.select(F.col(id_col).alias("id"), F.explode(toks).alias("term"))
-        .filter(F.length("term") > 0)
-        .groupBy("id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    n_docs = df.select(
-        F.count_distinct(F.col(id_col)).alias("__n")
-    )  # 1 row, broadcast below
-    with_df = per_doc.withColumn(
-        "df", F.count(F.lit(1)).over(Window.partitionBy("term"))
-    ).filter(F.col("df") >= min_df)
-    scored = with_df.crossJoin(F.broadcast(n_docs)).select(
-        "id",
-        "term",
-        "tf",
-        "df",
-        F.round(
-            F.col("tf")
-            * (F.log((1 + F.col("__n")) / (1 + F.col("df"))) + F.lit(1.0)),
-            6,
-        ).alias("tfidf"),
-    )
-    w = Window.partitionBy("id").orderBy(F.col("tfidf").desc(), F.col("term").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= k)
-        .select(F.col("id").alias(id_col), "term", "tf", "df", "tfidf", "rnk")
-    )
-
-
 # -------------------------------------------- dataset content fingerprint
 
 def dataset_fingerprint(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:

@@ -681,8 +681,6 @@ _PACK_SHARD_SQL = r"""
         GROUP BY 1, 2
     """
 
-_APPROX_S = [("key", "string"), ("n_exact", "bigint"), ("within_bound", "int")]
-
 # Rank-error window for the GK percentile check: percentile_approx at
 # accuracy=10000 guarantees rank error <= n/10000 rows; the check accepts
 # any value between the EXACT percentiles at p±0.002 — a 20x margin over
@@ -992,9 +990,6 @@ def approx_sketches_sketch_only(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("q_0_5").cast("double").alias("estimate"),
     )
     return hll.unionByName(gk).unionByName(bk)
-
-
-_ANN_S = [("query_id", "bigint"), ("neighbor_id", "bigint"), ("cos", "double"), ("rnk", "int")]
 
 
 def q_sim_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -243,170 +243,6 @@ def finalize_agg_state(state, keys, specs):
     return state.select(*out)
 
 
-def rfm_segments(
-    df,
-    key_col: str,
-    ts_col: str,
-    amount_col: str,
-    n_bins: int = 5,
-    as_of=None,
-    method: str = "ntile",
-):
-    """RFM customer segmentation: per key, recency (seconds since the
-    key's latest event, relative to `as_of` — default: the dataset's
-    max timestamp, so the result is reproducible from the data alone),
-    frequency (event count) and monetary (amount sum), each scored
-    into `n_bins` quantile bins via ntile, plus the concatenated
-    'r-f-m' segment label. Higher score = better (more recent / more
-    frequent / higher spend) — the marketing-analytics convention.
-
-    Determinism: ntile over ties is order-dependent, so every ranking
-    orders by (metric, key) — reruns and engines agree exactly (the
-    DuckDB differential in tests/test_property_r8.py pins this).
-
-    Shape: one hash aggregate to key granularity (the only
-    event-row-sized stage), then scoring over the key-sized frame.
-    method='ntile' (default) is the exact marketing convention —
-    count-balanced bins — but each ntile is a GLOBAL window (Spark
-    moves the key-sized frame to one task for the sort): fine up to
-    tens of millions of customers, a bottleneck beyond. method=
-    'percentile' is the 100x-scale path: bin edges from one exact
-    percentile aggregate, broadcast, per-row bin as a pure function of
-    the value (quantile_discretize) — fully parallel, differing from
-    ntile only in how ties straddling a boundary split. `as_of`
-    default folds in as a broadcast 1-row aggregate, no driver
-    collect."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    if n_bins < 2:
-        raise ValueError(f"n_bins must be >= 2, got {n_bins}")
-    if method not in ("ntile", "percentile"):
-        raise ValueError(f"method must be ntile|percentile, got {method!r}")
-    per_key = df.groupBy(F.col(key_col).alias("key")).agg(
-        F.max(F.unix_timestamp(F.col(ts_col))).alias("__last"),
-        F.count(F.lit(1)).alias("frequency"),
-        F.sum(F.col(amount_col)).alias("monetary"),
-    )
-    if as_of is None:
-        anchor = per_key.agg(F.max("__last").alias("__asof"))
-        per_key = per_key.crossJoin(F.broadcast(anchor))
-    else:
-        t = F.lit(as_of)
-        per_key = per_key.withColumn(
-            "__asof", F.unix_timestamp(t.cast("timestamp"))
-        )
-    per_key = per_key.withColumn(
-        "recency_seconds", (F.col("__asof") - F.col("__last")).cast("long")
-    ).drop("__last", "__asof")
-    if method == "percentile":
-        scored = per_key
-        for col, asc in (
-            ("recency_seconds", False),  # smaller recency = better = high bin
-            ("frequency", True),
-            ("monetary", True),
-        ):
-            name = {"recency_seconds": "r", "frequency": "f", "monetary": "m"}[col]
-            tmp = quantile_discretize(scored, col, n_bins, out_col=f"__{name}")
-            if asc:
-                scored = tmp.withColumn(f"{name}_score", F.col(f"__{name}"))
-            else:  # invert: most recent (small value) gets the top bin
-                scored = tmp.withColumn(
-                    f"{name}_score", (F.lit(n_bins + 1) - F.col(f"__{name}")).cast("int")
-                )
-            scored = scored.drop(f"__{name}")
-        return scored.select(
-            F.col("key").alias(key_col),
-            "recency_seconds",
-            "frequency",
-            "monetary",
-            "r_score",
-            "f_score",
-            "m_score",
-            F.concat_ws(
-                "-", F.col("r_score"), F.col("f_score"), F.col("m_score")
-            ).alias("segment"),
-        )
-    # recency: SMALLER is better → rank ascending so bin n = most recent
-    r_w = Window.orderBy(F.col("recency_seconds").desc(), F.col("key").asc())
-    f_w = Window.orderBy(F.col("frequency").asc(), F.col("key").asc())
-    m_w = Window.orderBy(F.col("monetary").asc(), F.col("key").asc())
-    return (
-        per_key.withColumn("r_score", F.ntile(n_bins).over(r_w).cast("int"))
-        .withColumn("f_score", F.ntile(n_bins).over(f_w).cast("int"))
-        .withColumn("m_score", F.ntile(n_bins).over(m_w).cast("int"))
-        .select(
-            F.col("key").alias(key_col),
-            "recency_seconds",
-            "frequency",
-            "monetary",
-            "r_score",
-            "f_score",
-            "m_score",
-            F.concat_ws(
-                "-", F.col("r_score"), F.col("f_score"), F.col("m_score")
-            ).alias("segment"),
-        )
-    )
-
-
-def histogram_fixed_width(
-    df,
-    value_col: str,
-    n_bins: int = 10,
-    lo: float | None = None,
-    hi: float | None = None,
-):
-    """(bin, lo_edge, hi_edge, n): equal-width histogram of a numeric
-    column — the profiling / distribution-drift primitive. With lo/hi
-    omitted the range comes from a 1-row min/max aggregate folded in
-    via broadcast cross join (no driver collect — the same pattern as
-    zorder's stats and pagerank's dangling mass). Values at the top
-    edge land in the last bin (right-closed there, half-open
-    elsewhere); out-of-range values with explicit lo/hi are clamped
-    into the edge bins rather than dropped (drift monitoring wants to
-    SEE mass piling at the edges). NULLs are excluded.
-
-    Shape: one pass + one bin-keyed hash aggregate (map-side combined;
-    output is n_bins rows). Empty bins are absent — left-join a
-    sequence() grid if a dense histogram is needed."""
-    from pyspark.sql import functions as F
-
-    if n_bins < 1:
-        raise ValueError(f"n_bins must be >= 1, got {n_bins}")
-    if (lo is None) != (hi is None):
-        raise ValueError("pass both lo and hi, or neither")
-    x = df.select(F.col(value_col).cast("double").alias("x")).filter(
-        F.col("x").isNotNull()
-    )
-    if lo is None:
-        rng = x.agg(F.min("x").alias("__lo"), F.max("x").alias("__hi"))
-        x = x.crossJoin(F.broadcast(rng))
-    else:
-        if not hi > lo:
-            raise ValueError(f"need hi > lo, got {lo}/{hi}")
-        x = x.withColumn("__lo", F.lit(float(lo))).withColumn(
-            "__hi", F.lit(float(hi))
-        )
-    width = (F.col("__hi") - F.col("__lo")) / n_bins
-    raw = F.floor((F.col("x") - F.col("__lo")) / width)
-    bin_ = F.least(F.greatest(raw, F.lit(0)), F.lit(n_bins - 1)).cast("int")
-    # degenerate all-equal range: everything in bin 0
-    bin_ = F.when(F.col("__hi") == F.col("__lo"), F.lit(0)).otherwise(bin_)
-    return (
-        x.select(bin_.alias("bin"), "__lo", "__hi")
-        .groupBy("bin", "__lo", "__hi")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            "bin",
-            F.round(F.col("__lo") + F.col("bin") * (F.col("__hi") - F.col("__lo")) / n_bins, 6).alias("lo_edge"),
-            F.round(F.col("__lo") + (F.col("bin") + 1) * (F.col("__hi") - F.col("__lo")) / n_bins, 6).alias("hi_edge"),
-            "n",
-        )
-        .orderBy("bin")
-    )
-
-
 def quantile_discretize(
     df,
     value_col: str,
@@ -569,7 +405,7 @@ def mg_summary(
     Output: the MERGED summary (item string nullable, c long) — one row
     per surviving counter plus a NULL-item row carrying the total
     decrement-round mass (the error term). Summaries from disjoint data
-    merge by summation + re-truncation (streaming/sketches.py); NULL
+    merge by summation + re-truncation; NULL
     input values are ignored. heavy_hitters() below converts a summary
     to (item, count_lo, count_hi)."""
     import pandas as pd
@@ -679,63 +515,6 @@ def mutual_information(df, col_a: str, col_b: str, base: float = 2.7182818284590
         .collect()[0]
     )
     return float(mi_row["mi"] or 0.0)
-
-
-def target_encode(
-    df,
-    cat_col: str,
-    target_col: str,
-    smoothing: float = 20.0,
-    leave_one_out: bool = False,
-    out_col: str | None = None,
-):
-    """Smoothed target (mean) encoding of a categorical column — the
-    high-cardinality-feature workhorse:
-
-        enc(c) = (sum_c + m·global_mean) / (n_c + m)
-
-    with `smoothing` m pulling rare categories toward the global mean.
-    `leave_one_out=True` excludes the ROW'S OWN target from its
-    category statistics ((sum_c − y)/(n_c − 1), smoothed the same way)
-    — the standard guard against target leakage when encoding the
-    training split itself; categories of size 1 fall back to the
-    global mean (their LOO statistic does not exist).
-
-    One category-keyed aggregate + a broadcast join back (category
-    table is vocabulary-sized); the global mean rides a broadcast
-    1-row aggregate. NULL categories encode as their own group; NULL
-    targets are excluded from statistics but still receive an
-    encoding. Appends `out_col` (default '<cat>_te')."""
-    from pyspark.sql import functions as F
-
-    if smoothing < 0:
-        raise ValueError(f"smoothing must be >= 0, got {smoothing}")
-    out_col = out_col or f"{cat_col}_te"
-    y = F.col(target_col).cast("double")
-    cat = F.coalesce(F.col(cat_col).cast("string"), F.lit("\x00NULL"))
-    per_cat = df.groupBy(cat.alias("__cat")).agg(
-        F.sum(y).alias("__sum"), F.count(y).alias("__cnt")
-    )
-    glob = df.agg(
-        F.avg(y).alias("__gmean")
-    )
-    joined = (
-        df.withColumn("__cat", cat)
-        .join(F.broadcast(per_cat), "__cat")
-        .crossJoin(F.broadcast(glob))
-    )
-    m = float(smoothing)
-    if leave_one_out:
-        s = F.when(y.isNotNull(), F.col("__sum") - y).otherwise(F.col("__sum"))
-        c = F.when(y.isNotNull(), F.col("__cnt") - 1).otherwise(F.col("__cnt"))
-        enc = F.when(
-            c > 0, (s + m * F.col("__gmean")) / (c + m)
-        ).otherwise(F.col("__gmean"))
-    else:
-        enc = (F.col("__sum") + m * F.col("__gmean")) / (F.col("__cnt") + m)
-    return joined.withColumn(out_col, F.round(enc, 6)).drop(
-        "__cat", "__sum", "__cnt", "__gmean"
-    )
 
 
 # ------------------------------------------------------------------

@@ -43,7 +43,7 @@ Design rules the composition enforces (each learned from a probe):
   rank pass (r15) — the composition adds no new shuffle beyond its
   stages.
 
-Measured 1×/10×/100× by tools/scale_probe_pipeline_full.py; see
+Measured 1×/10×/100× (frozen in SCALE_PROBE_PIPELINE_r14.json); see
 SCALING.md §curation-pipeline.
 """
 

@@ -55,12 +55,6 @@ def plan_report(df: DataFrame, executed: DataFrame | None = None) -> dict[str, s
     }
 
 
-def plan_contains(df: DataFrame, needle: str, which: str = "physical") -> bool:
-    """Plan-shape assertion helper (SURVEY §5.3): does the chosen plan
-    string mention `needle` (e.g. 'PushedFilters', 'BroadcastHashJoin')?"""
-    return needle in plan_report(df)[which]
-
-
 def plan_tree(df: DataFrame, which: str = "optimized") -> dict:
     """Recursive plan tree as JSON-able dicts — parity with the
     reference's node JSON for its jointjs UI (QueryService.asmx.cs:

@@ -64,8 +64,9 @@ def get_spark(app_name: str = "distributedqueryengine-spark") -> SparkSession:
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # UI off for tests/bench (port + thread overhead); tools that
-        # read stage metrics over the REST API (tools/scale_probe_
-        # pipelines.py shuffle-bytes accounting) opt in via env var.
+        # read stage metrics over the REST API opt in via env var (the
+        # shuffle-bytes figures frozen in SCALE_PROBE_r1*.json were
+        # read that way).
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         # events.parquet stores TIMESTAMP(NANOS); Spark has no nanos
         # timestamp type, so read as long and convert in load_table.

@@ -48,8 +48,8 @@ timestamp skipping effective.
 Filesystems (r13): a bare POSIX path stays driver-local (os.walk +
 plain open — the lab-lake fast path). Any scheme-qualified path
 (`file:`, `hdfs://`, `s3a://`, ...) routes the listing and the
-format-version marker through the session's Hadoop FS (the same
-pattern as streaming/sketches.py state), and the executor-side footer
+format-version marker through the session's Hadoop FS, and the
+executor-side footer
 reads through `pyarrow.fs.FileSystem.from_uri` — so a zonemap can
 live next to a non-local table. `file:` URIs take the same branch a
 cluster URI would, which is what the tests exercise.
@@ -567,8 +567,8 @@ def update_zonemap(
     # drop stats for no-longer-live files via a LEFT SEMI join against
     # the live listing — an isin() with tens of thousands of literals
     # builds a giant In-expression whose analysis/codegen alone took
-    # 17.7s at 20k files (slower than the 2.4s full rebuild; measured
-    # in tools/zonemap_files_probe.py). The semi join is a broadcast
+    # 17.7s at 20k files (slower than the 2.4s full rebuild; frozen in
+    # ZONEMAP_FILES_PROBE_r11.json). The semi join is a broadcast
     # hash join against a name-only DataFrame: flat in file count.
     live_df = spark.createDataFrame(
         [(f,) for f in live], "file string"

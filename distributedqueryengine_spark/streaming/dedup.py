@@ -176,8 +176,7 @@ def stream_dedup_candidates(
     running stream's static side; verified empirically r15), so use
     this form for a FROZEN index snapshot; an index that grows while
     the stream runs goes through the foreachBatch re-read pattern
-    (`neardup_candidates_foreach_batch` /
-    `incremental_dedup_foreach_batch`), where each epoch builds a
+    (`neardup_candidates_foreach_batch`), where each epoch builds a
     fresh DataFrame and therefore a fresh listing. A pair colliding in several bands
     appears once per band; dedup to distinct pairs downstream where
     the verification join wants unique (a, b) anyway (per-batch
@@ -195,82 +194,6 @@ def stream_dedup_candidates(
         .filter(F.col("new_id") != F.col("corpus_id"))
         .select("new_id", "corpus_id", "band")
     )
-
-
-def incremental_dedup_foreach_batch(
-    index_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ngram: int = 3,
-    num_perm: int = 32,
-    bands: int = 8,
-    portable: bool = False,
-    candidate_handler=None,
-):
-    """foreachBatch function for the FULL continuous-dedup loop: each
-    micro-batch is checked against the index AND then appended to it,
-    so later arrivals dedup against everything that came before —
-    including earlier micro-batches of the same stream, which the pure
-    stream-static join cannot see.
-
-    Per epoch (order is load-bearing):
-    1. band-bucket the batch (per-row pipeline; batch is small),
-    2. candidates = batch × current index (cross-batch pairs)
-       ∪ batch × batch with id_a < id_b (intra-batch pairs — an
-       append-only index read BEFORE the write cannot produce them),
-    3. hand (epoch_id, candidates DataFrame) to `candidate_handler`,
-    4. append the batch's buckets to `index_dir` (parquet append — at
-       scale a partitioned/bucketed table write, with periodic
-       compaction like any streaming sink).
-
-    Exactly-once note: foreachBatch may replay an epoch on failure;
-    the append in (4) is then duplicated. Bucket rows are idempotent
-    FACTS (same (id, band, bh)), so replays only duplicate candidate
-    emission — dedup downstream on (pair) as usual, or make (4) an
-    overwrite-by-epoch partition write (sinks.write_partitioned) for
-    strict exactly-once. Seed the index by writing
-    `build_band_index(corpus, ...)` to `index_dir` first.
-    """
-
-    def handle(batch_df, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        nb = narrow_minhash_band_buckets(
-            batch_df, id_col, text_col, ngram, num_perm, bands, portable=portable
-        ).persist()
-        try:
-            import os
-
-            a = nb.withColumnRenamed("id", "new_id")
-            intra = (
-                a.join(
-                    nb.withColumnRenamed("id", "corpus_id"),
-                    ["band", "bh"],
-                )
-                .filter(F.col("new_id") > F.col("corpus_id"))
-                .select("new_id", "corpus_id", "band")
-            )
-            has_index = os.path.isdir(index_dir) and any(
-                f.endswith(".parquet") for f in os.listdir(index_dir)
-            )
-            if has_index:
-                idx = spark.read.parquet(index_dir).select(
-                    F.col("id").alias("corpus_id"), "band", "bh"
-                )
-                cross = (
-                    a.join(idx, ["band", "bh"])
-                    .filter(F.col("new_id") != F.col("corpus_id"))
-                    .select("new_id", "corpus_id", "band")
-                )
-                cands = cross.unionByName(intra)
-            else:
-                cands = intra
-            if candidate_handler is not None:
-                candidate_handler(epoch_id, cands)
-            nb.write.mode("append").parquet(index_dir)
-        finally:
-            nb.unpersist()
-
-    return handle
 
 
 def stream_exact_dedup(
@@ -336,20 +259,10 @@ def compact_band_index(
 # ---------------------------------------------------------------- lifecycle
 # Persisted band-index layout (r15 — the dedup analogue of
 # functions/ann_store.py's IVF lifecycle): `index/` holds the (id,
-# band, bh) bucket rows, `occupancy/` a build-time COARSE occupancy
-# baseline (band × bh-hash cell, bounded cells), `meta/` the build
-# parameters. Appends go to `index/` only; the baseline stays frozen
-# so staleness is measured against the distribution the index was
-# built (and its join pruning tuned) for.
+# band, bh) bucket rows, `meta/` the build parameters. Appends go to
+# `index/` only.
 
 _BAND_META_VERSION = 1
-_OCC_CELLS = 128  # coarse bh cells per band: 8 bands × 128 = 1k rows
-
-
-def _band_occupancy(index: DataFrame) -> DataFrame:
-    return index.groupBy(
-        "band", F.pmod(F.col("bh"), F.lit(_OCC_CELLS)).alias("cell")
-    ).agg(F.count(F.lit(1)).alias("n"))
 
 
 def save_band_index(
@@ -361,16 +274,11 @@ def save_band_index(
     portable: bool = False,
 ) -> None:
     """Persist a band-bucket index (from :func:`build_band_index`)
-    with its occupancy baseline and build meta, so later sessions can
-    probe it, append micro-batches to it, and ask whether it has
-    drifted (``band_index_staleness``)."""
+    with its build meta, so later sessions can probe it and append
+    micro-batches to it."""
     base = path.rstrip("/")
     index.select("id", "band", "bh").write.mode("overwrite").parquet(
         base + "/index"
-    )
-    saved = index.sparkSession.read.parquet(base + "/index")
-    _band_occupancy(saved).coalesce(1).write.mode("overwrite").parquet(
-        base + "/occupancy"
     )
     index.sparkSession.createDataFrame(
         [(int(_BAND_META_VERSION), int(ngram), int(num_perm), int(bands),
@@ -383,10 +291,9 @@ def append_to_band_index(
     batch_buckets: DataFrame, path: str, files_threshold: int = 64
 ) -> dict:
     """Append a micro-batch's (id, band, bh) bucket rows to a saved
-    index layout. The occupancy BASELINE is deliberately untouched —
-    staleness compares current occupancy against build time. Parquet
-    append is idempotent-fact semantics (same caveat as
-    incremental_dedup_foreach_batch); compact periodically with
+    index layout. Parquet append is idempotent-fact semantics (a
+    replayed epoch appends the same (id, band, bh) rows again, which
+    compaction dedups); compact periodically with
     :func:`compact_band_index` over ``path + "/index"``.
 
     Returns {n_files, needs_compaction} (r16 — the lifecycle surfaces
@@ -439,11 +346,10 @@ def neardup_candidates_foreach_batch(
     next micro-batch with no refresh call, because the listing happens
     at read time inside the batch context — joins the micro-batch
     against it, and hands (epoch_id, candidates DataFrame) to
-    ``candidate_handler``. Unlike incremental_dedup_foreach_batch it
-    does NOT append the batch to the index: the curation front only
-    FLAGS; index growth is the batch tier's decision (append verified
-    survivors via append_to_band_index, monitor with
-    band_index_staleness, rebuild/compact when it fires)."""
+    ``candidate_handler``. It does NOT append the batch to the index:
+    the curation front only FLAGS; index growth is the batch tier's
+    decision (append verified survivors via append_to_band_index,
+    compact with compact_band_index)."""
 
     def handle(batch_df, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -455,65 +361,3 @@ def neardup_candidates_foreach_batch(
         candidate_handler(epoch_id, cands)
 
     return handle
-
-
-def band_index_staleness(
-    spark,
-    path: str,
-    tvd_threshold: float = 0.2,
-    growth_threshold: float = 1.0,
-    files_threshold: int = 64,
-) -> dict:
-    """Has ingestion drifted the band index far enough from its
-    build-time shape that the corpus deserves a re-dedup (and the
-    bucketed layout a rebuild)? Same report as
-    ann_store.ivf_index_staleness: {n_base, n_now, growth, tvd,
-    max_cell_share, retrain}, computed over the coarse (band, cell)
-    occupancy distribution — one count-by-cell aggregate over the
-    index (8-byte columns, never text). A shifted crawl (one domain
-    suddenly dominating) concentrates new rows in few cells and moves
-    tvd long before growth alone would."""
-    base = path.rstrip("/")
-    baseline = {
-        (r["band"], r["cell"]): r["n"]
-        for r in spark.read.parquet(base + "/occupancy").collect()
-    }
-    now = {
-        (r["band"], r["cell"]): r["n"]
-        for r in _band_occupancy(
-            spark.read.parquet(base + "/index")
-        ).collect()
-    }
-    n_base = sum(baseline.values())
-    n_now = sum(now.values())
-    if n_base == 0 or n_now == 0:
-        raise ValueError(
-            f"band index at {path} has an empty "
-            f"{'baseline occupancy' if n_base == 0 else 'current index'} "
-            f"(n_base={n_base}, n_now={n_now}) — rebuild with "
-            "save_band_index over a non-empty corpus"
-        )
-    cells = set(baseline) | set(now)
-    tvd = 0.5 * sum(
-        abs(now.get(c, 0) / n_now - baseline.get(c, 0) / n_base)
-        for c in cells
-    )
-    growth = n_now / n_base - 1.0
-    # r16: surface flat-dir fragmentation alongside drift, mirroring
-    # ivf_index_staleness — one call reports both maintenance decisions
-    from distributedqueryengine_spark.functions.ann_store import (
-        index_fragmentation,
-    )
-
-    frag = index_fragmentation(spark, base + "/index")
-    n_files = sum(frag.values())
-    return {
-        "n_base": int(n_base),
-        "n_now": int(n_now),
-        "growth": float(growth),
-        "tvd": float(tvd),
-        "max_cell_share": float(max(now.values()) / n_now),
-        "retrain": bool(tvd > tvd_threshold or growth > growth_threshold),
-        "n_files": int(n_files),
-        "needs_compaction": bool(n_files > files_threshold),
-    }

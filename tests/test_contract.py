@@ -64,17 +64,12 @@ def test_round7_operator_guards(spark, tables, tmp_path):
     from distributedqueryengine_spark.operators.cdc import snapshot_diff
     from distributedqueryengine_spark.operators.timeseries import resample_fill
     from distributedqueryengine_spark.sources.sinks import merge_upsert_files
-    from distributedqueryengine_spark.streaming.enrich import (
-        enrich_point_in_time,
-    )
 
     nation = tables["nation"]
     with _pytest.raises(ValueError, match="diff key"):
         snapshot_diff(nation, nation, [])
     with _pytest.raises(ValueError, match="at least one aggregate"):
         resample_fill(tables["events"], ["user_id"], "ts", 60, {})
-    with _pytest.raises(ValueError, match="valid_from"):
-        enrich_point_in_time(tables["events"], nation, "n_nationkey", "ts")
 
     path = str(tmp_path / "t")
     nation.write.parquet(path)

@@ -405,58 +405,6 @@ def test_band_layout_guards_reject_bad_params(spark, tables):
     assert band_buckets(sigs, 32, 16).count() > 0
 
 
-def test_incremental_near_duplicates_matches_full(spark, tables):
-    """Incremental dedup of an arriving batch against a PREBUILT band
-    index must find exactly the pairs the full-corpus pipeline finds,
-    restricted to pairs touching the increment — new↔corpus and
-    new↔new, never corpus↔corpus (already settled when the index was
-    built)."""
-    from pyspark.sql import functions as F
-
-    from distributedqueryengine_spark.functions.dedup import (
-        build_band_index,
-        incremental_near_duplicates,
-        minhash_near_duplicates,
-    )
-
-    base = tables["documents"].limit(200).select("doc_id", "text")
-    corpus = base.filter(F.col("doc_id") % 5 != 0)
-    # increment: genuinely-new docs + exact copies of corpus docs under
-    # shifted ids (cross-split near-dups) + one internal duplicate pair
-    fresh = base.filter(F.col("doc_id") % 5 == 0)
-    copies = corpus.limit(10).select(
-        (F.col("doc_id") + 500_000).alias("doc_id"), "text"
-    )
-    intra_dup = fresh.limit(3).select(
-        (F.col("doc_id") + 900_000).alias("doc_id"), "text"
-    )
-    new = fresh.unionByName(copies).unionByName(intra_dup)
-    new_ids = {r.doc_id for r in new.select("doc_id").collect()}
-
-    idx = build_band_index(corpus, "doc_id", "text").persist()
-    idx.count()
-    got = {
-        (frozenset((r.id_a, r.id_b)), r.jaccard)
-        for r in incremental_near_duplicates(
-            new, corpus, "doc_id", "text", band_index=idx
-        ).collect()
-    }
-
-    full = minhash_near_duplicates(
-        corpus.unionByName(new), "doc_id", "text"
-    ).collect()
-    expect = {
-        (frozenset((r.id_a, r.id_b)), r.jaccard)
-        for r in full
-        if r.id_a in new_ids or r.id_b in new_ids
-    }
-    assert got == expect, f"missing={expect - got} extra={got - expect}"
-    assert len(got) >= 13  # 10 planted cross pairs + 3 intra pairs
-    # corpus-internal pairs must NOT be re-reported
-    assert all(s & new_ids for s, _ in got)
-    idx.unpersist()
-
-
 def test_staged_near_duplicates_parity(spark, tables):
     """staged=True (exact-collapse -> LSH on survivors -> map back)
     must return EXACTLY the unstaged pipeline's pairs — same ids, same

@@ -24,60 +24,6 @@ def duck():
     return con
 
 
-@settings(
-    max_examples=4,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    k=st.integers(min_value=1, max_value=8),
-    min_df=st.integers(min_value=1, max_value=5),
-)
-def test_tfidf_top_terms_matches_duckdb(spark, tables, duck, k, min_df):
-    """Random (k, min_df) through tfidf_top_terms over the documents
-    table vs the identical smoothed-idf SQL in DuckDB — full value
-    check including the deterministic tie-broken ranking."""
-    from distributedqueryengine_spark.functions.text import tfidf_top_terms
-
-    docs = tables["documents"].select("doc_id", "text")
-    got = sorted(
-        (r.doc_id, r.term, r.tf, r.df, r.tfidf, r.rnk)
-        for r in tfidf_top_terms(docs, "text", "doc_id", k=k, min_df=min_df).collect()
-    )
-    expect = sorted(
-        tuple(r)
-        for r in duck.execute(
-            f"""
-            WITH tok AS (
-              SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS term
-              FROM documents
-            ), per_doc AS (
-              SELECT doc_id AS id, term, count(*) AS tf
-              FROM tok WHERE length(term) > 0 GROUP BY 1, 2
-            ), docfreq AS (
-              SELECT term, count(*) AS df FROM per_doc GROUP BY 1
-            ), n AS (
-              SELECT count(DISTINCT doc_id) AS nd FROM documents
-            ), scored AS (
-              SELECT p.id, p.term, p.tf, d.df,
-                     round(p.tf * (ln((1 + n.nd) / (1 + d.df)) + 1.0), 6) AS tfidf
-              FROM per_doc p JOIN docfreq d USING (term), n
-              WHERE d.df >= {min_df}
-            ), ranked AS (
-              SELECT *, CAST(row_number() OVER (
-                  PARTITION BY id ORDER BY tfidf DESC, term ASC
-              ) AS INTEGER) AS rnk
-              FROM scored
-            )
-            SELECT id AS doc_id, term, tf, df, tfidf, rnk
-            FROM ranked WHERE rnk <= {k}
-            """
-        ).fetchall()
-    )
-    assert [g[:4] + g[5:] for g in got] == [e[:4] + e[5:] for e in expect]
-    assert all(abs(g[4] - e[4]) <= 1e-6 for g, e in zip(got, expect))
-
-
 def test_event_transitions_matches_duckdb(spark, tables, duck):
     """First-order transition matrix over real event sequences vs the
     DuckDB lead-window mirror, with and without terminal rows; each
@@ -127,109 +73,6 @@ def test_event_transitions_matches_duckdb(spark, tables, duck):
         for f_ev, _t, _n, p in got:
             sums[f_ev] = sums.get(f_ev, 0.0) + p
         assert all(abs(s - 1.0) < 1e-4 for s in sums.values()), sums
-
-
-@settings(
-    max_examples=4,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(n_bins=st.integers(min_value=2, max_value=10))
-def test_rfm_segments_matches_duckdb(spark, tables, duck, n_bins):
-    """Random bin counts through rfm_segments over orders vs the DuckDB
-    ntile mirror — identical metrics, scores, and segment labels under
-    the deterministic (metric, key) ordering."""
-    from distributedqueryengine_spark.operators.aggregates import rfm_segments
-
-    orders = tables["orders"].select("o_custkey", "o_orderdate", "o_totalprice")
-    got = sorted(
-        (r.o_custkey, r.recency_seconds, r.frequency,
-         round(r.monetary, 2), r.r_score, r.f_score, r.m_score, r.segment)
-        for r in rfm_segments(
-            orders, "o_custkey", "o_orderdate", "o_totalprice", n_bins=n_bins
-        ).collect()
-    )
-    expect = sorted(
-        tuple(r)
-        for r in duck.execute(
-            f"""
-            WITH per_key AS (
-              SELECT o_custkey AS key,
-                     max(epoch(CAST(o_orderdate AS TIMESTAMP))) AS last_ts,
-                     count(*) AS frequency,
-                     sum(o_totalprice) AS monetary
-              FROM orders GROUP BY 1
-            ), anchored AS (
-              SELECT *, (SELECT max(last_ts) FROM per_key) - last_ts AS recency_seconds
-              FROM per_key
-            ), scored AS (
-              SELECT key, recency_seconds, frequency, monetary,
-                     CAST(ntile({n_bins}) OVER (ORDER BY recency_seconds DESC, key ASC) AS INTEGER) AS r_score,
-                     CAST(ntile({n_bins}) OVER (ORDER BY frequency ASC, key ASC) AS INTEGER) AS f_score,
-                     CAST(ntile({n_bins}) OVER (ORDER BY monetary ASC, key ASC) AS INTEGER) AS m_score
-              FROM anchored
-            )
-            SELECT key, recency_seconds, frequency, round(monetary, 2),
-                   r_score, f_score, m_score,
-                   r_score || '-' || f_score || '-' || m_score AS segment
-            FROM scored
-            """
-        ).fetchall()
-    )
-    assert got == expect
-
-
-@settings(
-    max_examples=4,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(n_bins=st.integers(min_value=1, max_value=24))
-def test_histogram_fixed_width_matches_duckdb(spark, tables, duck, n_bins):
-    """Equal-width histogram over l_extendedprice (auto min/max range)
-    vs the identical DuckDB arithmetic, at random bin counts."""
-    from distributedqueryengine_spark.operators.aggregates import (
-        histogram_fixed_width,
-    )
-
-    duck.execute(
-        "CREATE OR REPLACE VIEW lineitem AS SELECT * FROM "
-        f"read_parquet('{SF_DIR}/lineitem.parquet')"
-    )
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    got = [
-        (r.bin, r.lo_edge, r.hi_edge, r.n)
-        for r in histogram_fixed_width(li, "l_extendedprice", n_bins).collect()
-    ]
-    expect = [
-        tuple(r)
-        for r in duck.execute(
-            f"""
-            WITH x AS (
-              SELECT CAST(l_extendedprice AS DOUBLE) AS x FROM lineitem
-              WHERE l_extendedprice IS NOT NULL
-            ), rng AS (
-              SELECT min(x) AS lo, max(x) AS hi FROM x
-            ), binned AS (
-              SELECT CASE WHEN hi = lo THEN 0 ELSE CAST(least(greatest(
-                         floor((x - lo) / ((hi - lo) / {n_bins})), 0), {n_bins} - 1) AS INTEGER)
-                     END AS bin, lo, hi
-              FROM x, rng
-            )
-            SELECT bin,
-                   round(lo + bin * (hi - lo) / {n_bins}, 6) AS lo_edge,
-                   round(lo + (bin + 1) * (hi - lo) / {n_bins}, 6) AS hi_edge,
-                   count(*) AS n
-            FROM binned GROUP BY bin, lo, hi ORDER BY bin
-            """
-        ).fetchall()
-    ]
-    assert [(g[0], g[3]) for g in got] == [(e[0], e[3]) for e in expect]
-    assert all(
-        abs(g[1] - e[1]) <= 1e-6 and abs(g[2] - e[2]) <= 1e-6
-        for g, e in zip(got, expect)
-    )
-    assert sum(g[3] for g in got) == li.filter(F.col("l_extendedprice").isNotNull()).count()
 
 
 @settings(
@@ -449,41 +292,6 @@ def test_item_cooccurrence_basket_cap(spark):
     assert ab.n_both == 2 and ab.n_a == 2 and ab.n_b == 2
 
 
-def test_rfm_percentile_method_scale_path(spark, tables):
-    """The fully-parallel percentile method: no single-partition window
-    in the plan, scores within ±1 bin of ntile on real orders (they
-    differ only where ties straddle a count-balanced boundary), and
-    monotone in the underlying metric."""
-    from distributedqueryengine_spark.operators.aggregates import rfm_segments
-
-    orders = tables["orders"].select("o_custkey", "o_orderdate", "o_totalprice")
-    ntile = {
-        r.o_custkey: (r.r_score, r.f_score, r.m_score)
-        for r in rfm_segments(
-            orders, "o_custkey", "o_orderdate", "o_totalprice", n_bins=5
-        ).collect()
-    }
-    pct_df = rfm_segments(
-        orders, "o_custkey", "o_orderdate", "o_totalprice",
-        n_bins=5, method="percentile",
-    )
-    # plan: no global-sort window (the ntile path's scale smell)
-    plan = pct_df._jdf.queryExecution().executedPlan().toString()
-    assert "Window [ntile" not in plan
-    pct = {
-        r.o_custkey: (r.r_score, r.f_score, r.m_score, r.monetary)
-        for r in pct_df.collect()
-    }
-    assert set(pct) == set(ntile)
-    for k in ntile:
-        for i in range(3):
-            assert abs(ntile[k][i] - pct[k][i]) <= 1, (k, ntile[k], pct[k])
-    # monotone: higher monetary never gets a lower m_score
-    by_m = sorted((v[3], v[2]) for v in pct.values())
-    scores = [s for _, s in by_m]
-    assert all(a <= b for a, b in zip(scores, scores[1:]))
-
-
 @settings(
     max_examples=4,
     deadline=None,
@@ -617,62 +425,6 @@ def test_mutual_information_semantics(spark, tables):
     )
     h_a = -sum((c / n) * math.log(c / n) for c in ca.values())
     assert abs(mutual_information(fdf, "a", "b") - h_a) < 1e-9
-
-
-def test_target_encode_matches_reference(spark, tables):
-    """Smoothed and leave-one-out encodings vs a python reference over
-    orders (priority → totalprice), incl. the size-1-category LOO
-    fallback and NULL-category handling."""
-    from collections import defaultdict
-
-    from distributedqueryengine_spark.operators.aggregates import target_encode
-
-    orders = tables["orders"].select(
-        "o_orderkey", "o_orderpriority", "o_totalprice"
-    )
-    rows = [(r.o_orderkey, r.o_orderpriority, r.o_totalprice) for r in orders.collect()]
-    m = 20.0
-    sums, cnts = defaultdict(float), defaultdict(int)
-    for _, c, v in rows:
-        sums[c] += v
-        cnts[c] += 1
-    gmean = sum(v for _, _, v in rows) / len(rows)
-
-    got = {
-        r.o_orderkey: r.o_orderpriority_te
-        for r in target_encode(
-            orders, "o_orderpriority", "o_totalprice", smoothing=m
-        ).collect()
-    }
-    for k, c, v in rows[:300]:
-        ref = (sums[c] + m * gmean) / (cnts[c] + m)
-        assert abs(got[k] - ref) < 1e-4, k
-
-    loo = {
-        r.o_orderkey: r.o_orderpriority_te
-        for r in target_encode(
-            orders, "o_orderpriority", "o_totalprice",
-            smoothing=m, leave_one_out=True,
-        ).collect()
-    }
-    for k, c, v in rows[:300]:
-        ref = (sums[c] - v + m * gmean) / (cnts[c] - 1 + m)
-        assert abs(loo[k] - ref) < 1e-4, k
-
-    # size-1 category with LOO and zero smoothing → global mean fallback
-    tiny = spark.createDataFrame(
-        [(1, "solo", 10.0), (2, "pair", 4.0), (3, "pair", 6.0), (4, None, 8.0)],
-        "id long, cat string, y double",
-    )
-    out = {
-        r.id: r.cat_te
-        for r in target_encode(
-            tiny, "cat", "y", smoothing=0.0, leave_one_out=True
-        ).collect()
-    }
-    assert out[1] == 7.0       # global mean (LOO undefined for n=1)
-    assert out[2] == 6.0 and out[3] == 4.0  # each other's value
-    assert out[4] == 7.0       # NULL category, single member → global mean
 
 
 def test_robust_zscore_matches_duckdb_and_resists_outliers(spark, tables, duck):

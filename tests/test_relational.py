@@ -429,41 +429,6 @@ def test_winsorize_matches_duckdb_quantiles(spark, tables):
         winsorize(li, ["l_quantity"], 0.9, 0.1)
 
 
-def test_profile_table_matches_exact_stats(spark, tables):
-    """profile_table vs exactly-computed per-column statistics on
-    orders (+ a planted NULL column): null counts exact, NDV within
-    HLL bounds, min/max exact, one row per column."""
-    from distributedqueryengine_spark.operators.profile import profile_table
-
-    o = tables["orders"].withColumn(
-        "maybe_null", F.when(F.col("o_orderkey") % 3 == 0, F.col("o_orderpriority"))
-    )
-    prof = {r.column: r for r in profile_table(o).collect()}
-    assert set(prof) == set(o.columns)
-    n = o.count()
-    for r in prof.values():
-        assert r.n_rows == n
-
-    exact_nulls = o.agg(
-        F.sum(F.col("maybe_null").isNull().cast("long"))
-    ).first()[0]
-    assert prof["maybe_null"].n_nulls == exact_nulls
-    assert prof["o_orderkey"].n_nulls == 0
-
-    exact_ndv = o.select("o_custkey").distinct().count()
-    assert abs(prof["o_custkey"].approx_ndv - exact_ndv) <= 0.06 * exact_ndv
-
-    assert prof["o_orderkey"].min == str(
-        o.agg(F.min("o_orderkey")).first()[0]
-    )
-    assert prof["o_orderkey"].max == str(
-        o.agg(F.max("o_orderkey")).first()[0]
-    )
-    # string column gets avg_len; numeric does not
-    assert prof["o_orderpriority"].avg_len is not None
-    assert prof["o_orderkey"].avg_len is None
-
-
 def test_incremental_agg_state_equals_full_recompute(spark, tables):
     """Three order 'increments' aggregated separately and state-merged
     (in two different merge orders) must equal a direct groupBy over

@@ -464,114 +464,6 @@ def test_zero_vector_does_not_poison_topk(spark):
     assert all(abs(r.cos) < 1e-6 for r in zero_q)
 
 
-def test_maxsim_topk_matches_numpy(spark):
-    """Late-interaction MaxSim vs a pure-numpy reference on synthetic
-    multi-vector docs with variable token counts; ranking is
-    deterministic under score ties (doc id asc)."""
-    import math
-    import random
-
-    import numpy as np
-
-    from distributedqueryengine_spark.functions.similarity import maxsim_topk
-
-    rng = random.Random(42)
-    dim = 8
-
-    def vec():
-        return [rng.gauss(0, 1) for _ in range(dim)]
-
-    docs = [(d, [vec() for _ in range(rng.randint(1, 7))]) for d in range(40)]
-    qs = [(q, [vec() for _ in range(rng.randint(1, 4))]) for q in range(5)]
-    docs_df = spark.createDataFrame(
-        docs, "doc_id long, token_vecs array<array<double>>"
-    ).repartition(8)
-    qs_df = spark.createDataFrame(
-        qs, "query_id long, token_vecs array<array<double>>"
-    )
-    k = 6
-    got = {
-        (r.query_id, r.rnk): (r.doc_id, r.score)
-        for r in maxsim_topk(qs_df, docs_df, k).collect()
-    }
-
-    def norm(m):
-        m = np.asarray(m, dtype=np.float64)
-        return m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-
-    for qid, qv in qs:
-        qm = norm(qv)
-        scores = []
-        for did, dv in docs:
-            s = float((qm @ norm(dv).T).max(axis=1).sum())
-            scores.append((did, round(s, 6)))
-        scores.sort(key=lambda t: (-t[1], t[0]))
-        for rnk in range(1, k + 1):
-            exp_d, exp_s = scores[rnk - 1]
-            g_d, g_s = got[(qid, rnk)]
-            assert g_d == exp_d and math.isclose(g_s, exp_s, abs_tol=1e-9), (
-                qid, rnk, got[(qid, rnk)], scores[rnk - 1],
-            )
-
-
-def test_maxsim_beats_mean_pooling_on_multi_topic_doc(spark):
-    """The semantics MaxSim exists for: a document covering TWO topics
-    matches a single-topic query better than mean-pooling would admit —
-    its best token wins, undiluted by the other topic's tokens."""
-    from distributedqueryengine_spark.functions.similarity import maxsim_topk
-
-    topic_a = [1.0, 0.0, 0.0, 0.0]
-    topic_b = [0.0, 1.0, 0.0, 0.0]
-    noise = [0.0, 0.0, 1.0, 0.0]
-    docs = spark.createDataFrame(
-        [
-            (0, [topic_a, topic_b]),        # multi-topic: has a perfect A token
-            (1, [[0.6, 0.55, 0.0, 0.0]]),   # single blended vector (mean-pooled)
-            (2, [noise]),
-        ],
-        "doc_id long, token_vecs array<array<double>>",
-    )
-    q = spark.createDataFrame(
-        [(0, [topic_a])], "query_id long, token_vecs array<array<double>>"
-    )
-    out = {r.rnk: r.doc_id for r in maxsim_topk(q, docs, 3).collect()}
-    assert out[1] == 0  # the multi-topic doc's exact A token wins
-
-
-def test_maxsim_topk_string_ids(spark):
-    """String query/doc ids (the common corpus case) flow through the
-    mapInPandas schema — id field types are derived from the inputs,
-    not hardcoded long (r8 advice)."""
-    import random
-
-    from distributedqueryengine_spark.functions.similarity import maxsim_topk
-
-    rng = random.Random(7)
-    dim = 4
-
-    def vec():
-        return [rng.gauss(0, 1) for _ in range(dim)]
-
-    docs_df = spark.createDataFrame(
-        [(f"doc-{d}", [vec() for _ in range(3)]) for d in range(12)],
-        "doc_id string, token_vecs array<array<double>>",
-    ).repartition(4)
-    qs_df = spark.createDataFrame(
-        [("q-a", [vec(), vec()]), ("q-b", [vec()])],
-        "query_id string, token_vecs array<array<double>>",
-    )
-    out = maxsim_topk(qs_df, docs_df, 3).collect()
-    assert len(out) == 6
-    assert {r.query_id for r in out} == {"q-a", "q-b"}
-    assert all(r.doc_id.startswith("doc-") for r in out)
-    assert dict(maxsim_topk(qs_df, docs_df, 3).dtypes)["doc_id"] == "string"
-
-    # empty query side: empty frame with the derived id types
-    empty = maxsim_topk(qs_df.limit(0), docs_df, 3)
-    assert empty.count() == 0
-    assert dict(empty.dtypes)["query_id"] == "string"
-
-
 def test_mine_hard_negatives_semantics(spark):
     """Hard negatives = top-k most similar EXCLUDING positives; max_cos
     drops false-negative near-duplicates; overfetch auto-sizes to the

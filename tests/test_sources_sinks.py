@@ -73,84 +73,6 @@ def test_jdbc_reader_constructs(spark):
     assert {"partition_column", "num_partitions", "predicate"} <= set(sig.parameters)
 
 
-def test_custom_python_datasource(spark):
-    """Spark 4 Python DataSource API: partition-parallel deterministic
-    synthetic events source."""
-    from distributedqueryengine_spark.sources import custom
-
-    custom.register(spark)
-    df = (
-        spark.read.format("synthetic_events")
-        .option("numRows", 500)
-        .option("numPartitions", 8)
-        .load()
-    )
-    assert df.count() == 500
-    assert df.select("event_id").distinct().count() == 500
-    # deterministic: same options → identical content
-    df2 = (
-        spark.read.format("synthetic_events")
-        .option("numRows", 500)
-        .option("numPartitions", 8)
-        .load()
-    )
-    assert df.subtract(df2).count() == 0 and df2.subtract(df).count() == 0
-    # composes with the relational engine
-    agg = df.groupBy("event_type").count()
-    assert agg.count() == 5
-
-
-def test_custom_streaming_datasource(spark):
-    """Streaming side of the custom source: micro-batches advance a
-    checkpointable offset; aggregation over the stream equals batch
-    recomputation over the same row range."""
-    from distributedqueryengine_spark.sources import custom
-
-    custom.register(spark)
-    stream = (
-        spark.readStream.format("synthetic_events")
-        .option("rowsPerBatch", 200)
-        .load()
-    )
-    from pyspark.sql import functions as F
-
-    agg = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("synth_stream_out")
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    import time
-
-    deadline = time.monotonic() + 60
-    while time.monotonic() < deadline:
-        rows = spark.sql("SELECT sum(n) AS t FROM synth_stream_out").collect()
-        if (rows[0].t or 0) >= 400:
-            break
-        time.sleep(1)
-    # Stop FIRST, then read the final table exactly once: sampling `total`
-    # while micro-batches are still committing races against the comparison
-    # read below (the table would advance past the sampled prefix).
-    q.stop()
-    q.awaitTermination(30)
-    got = {r.event_type: r.n for r in spark.sql("SELECT * FROM synth_stream_out").collect()}
-    total = sum(got.values())
-    assert total >= 400 and total % 200 == 0
-    # stream content equals the batch source over the same prefix
-    batch = (
-        spark.read.format("synthetic_events")
-        .option("numRows", total)
-        .option("numPartitions", 4)
-        .load()
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    expect = {r.event_type: r.n for r in batch.collect()}
-    assert got == expect
-
-
 def test_csv_malformed_row_modes(spark, tmp_path):
     """The three ANSI-ish CSV corruption policies, end-to-end:
     PERMISSIVE null-fills the bad cells and captures the raw line in

@@ -127,73 +127,6 @@ def test_stream_candidates_find_planted_duplicate(spark, tmp_path):
     assert all(nid != 11 for nid, _ in pairs), f"false positive: {pairs}"
 
 
-def test_incremental_index_catches_cross_batch_pairs(spark, tmp_path):
-    """The check-then-extend foreachBatch loop: a near-dup pair SPLIT
-    ACROSS micro-batches must be detected when the second half arrives
-    (the pure stream-static join cannot see it), an intra-batch pair
-    must be detected in its own epoch, and unrelated docs stay clean."""
-    import os
-    import time
-
-    import pandas as pd
-
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    batches = [
-        # batch 1: doc 1 (original) + unrelated doc 2
-        pd.DataFrame({"doc_id": [1, 2], "text": [
-            base + " today",
-            "entirely different material on columnar execution engines and shuffles",
-        ]}),
-        # batch 2: doc 3 near-dups doc 1 (cross-batch); docs 4+5 near-dup
-        # each other (intra-batch; one trailing word differs, so their
-        # Jaccard sits far above the 8-band/4-row S-curve threshold)
-        pd.DataFrame({"doc_id": [3, 4, 5], "text": [
-            base + " tomorrow",
-            "streaming ingestion pipelines must deduplicate every arriving document "
-            "against the full historical corpus before any training run starts today",
-            "streaming ingestion pipelines must deduplicate every arriving document "
-            "against the full historical corpus before any training run starts tonight",
-        ]}),
-    ]
-    src = str(tmp_path / "arrivals")
-    os.makedirs(src)
-    index_dir = str(tmp_path / "band_index")
-    schema = None
-    for i, pdf in enumerate(batches):
-        f = str(tmp_path / f"b{i}")
-        spark.createDataFrame(pdf).coalesce(1).write.parquet(f)
-        if schema is None:
-            schema = spark.read.parquet(f).schema
-        import glob as g
-        import shutil
-
-        shutil.copy(g.glob(f + "/*.parquet")[0], f"{src}/b{i}.parquet")
-        time.sleep(1.1)  # distinct mtimes → deterministic pickup order
-
-    emitted: dict[int, set] = {}
-
-    def handler(epoch_id, cands):
-        emitted[epoch_id] = {
-            (r.new_id, r.corpus_id)
-            for r in cands.select("new_id", "corpus_id").distinct().collect()
-        }
-
-    fb = SD.incremental_dedup_foreach_batch(index_dir, candidate_handler=handler)
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    q = stream.writeStream.foreachBatch(fb).start()
-    q.processAllAvailable()
-    q.stop()
-
-    all_pairs = {frozenset(p) for pairs in emitted.values() for p in pairs}
-    assert frozenset({1, 3}) in all_pairs, f"cross-batch pair missed: {emitted}"
-    assert frozenset({4, 5}) in all_pairs, f"intra-batch pair missed: {emitted}"
-    flat = {d for p in all_pairs for d in p}
-    assert 2 not in flat, f"unrelated doc flagged: {emitted}"
-    # the index now holds every document's buckets
-    idx_ids = {r.id for r in spark.read.parquet(index_dir).select("id").distinct().collect()}
-    assert idx_ids == {1, 2, 3, 4, 5}
-
-
 def test_compacted_index_equals_raw_and_probes_identically(spark, tmp_path):
     """compact_band_index: the bucketed table holds exactly the raw
     index's distinct rows, and candidates probed against it equal
@@ -312,18 +245,8 @@ def test_stream_candidates_with_index_refresh_between_batches(spark, tmp_path):
     near-dup tier's foreachBatch re-read must see corpus rows appended
     after the stream started (no restart, no refresh call), and each
     batch's candidate set must equal the batch-mode join against the
-    index content current at that batch. Also pins that the curated
-    output still has exactly ONE state operator with the tier wired."""
-    import datetime as dt
-
+    index content current at that batch."""
     import pandas as pd
-
-    from distributedqueryengine_spark.streaming.decontam import (
-        eval_gram_array,
-    )
-    from distributedqueryengine_spark.streaming.pipeline import (
-        curate_stream_with_neardup,
-    )
 
     base_txt = ("the quick brown fox jumps over the lazy dog "
                 "again and again every single day in the sunny meadow")
@@ -340,27 +263,19 @@ def test_stream_candidates_with_index_refresh_between_batches(spark, tmp_path):
         SD.build_band_index(corpus_a, "doc_id", "text"), ipath
     )
 
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
     b1 = pd.DataFrame({
         "doc_id": [10, 11],
         "text": [base_txt.replace("sunny", "rainy"),
                  "unrelated nothing shared with either corpus entry here"],
-        "ts": [t0, t0],
     })
     b2 = pd.DataFrame({
         "doc_id": [20],
         "text": [alt_txt.replace("joins", "queries")],
-        "ts": [t0],
     })
     src = str(tmp_path / "arrivals")
     spark.createDataFrame(b1).coalesce(1).write.mode("append").parquet(src)
     schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).parquet(src)
-    ev = eval_gram_array(
-        spark.createDataFrame(
-            pd.DataFrame({"doc_id": [99], "text": ["zz qq ww ee rr tt yy"]})
-        ), "doc_id", "text", 5,
-    )
     per_epoch: dict[int, set] = {}
 
     def handler(epoch_id, cands):
@@ -368,27 +283,20 @@ def test_stream_candidates_with_index_refresh_between_batches(spark, tmp_path):
             (r.new_id, r.corpus_id) for r in cands.collect()
         )
 
-    curated, nd_src, nd_handler = curate_stream_with_neardup(
-        stream, ev, ipath, handler, min_quality=0.0, lang=None,
-    )
-    qc = (curated.writeStream.outputMode("append")
-          .format("memory").queryName("refresh_curated").start())
-    qn = nd_src.writeStream.foreachBatch(nd_handler).start()
-    qc.processAllAvailable(); qn.processAllAvailable()
+    qn = stream.writeStream.foreachBatch(
+        SD.neardup_candidates_foreach_batch(ipath, handler)
+    ).start()
+    qn.processAllAvailable()
     got1 = set().union(*per_epoch.values()) if per_epoch else set()
     assert (10, 1) in got1 and all(n != 20 for n, _ in got1), got1
-
-    # the curated sink keeps the front's one-state-operator contract
-    prog = qc.lastProgress
-    assert prog and len(prog.get("stateOperators") or []) == 1, prog
 
     # index grows out-of-band; NO refresh call, NO restart
     SD.append_to_band_index(
         SD.build_band_index(corpus_b, "doc_id", "text"), ipath
     )
     spark.createDataFrame(b2).coalesce(1).write.mode("append").parquet(src)
-    qc.processAllAvailable(); qn.processAllAvailable()
-    qc.stop(); qn.stop()
+    qn.processAllAvailable()
+    qn.stop()
     got2 = set().union(*per_epoch.values())
     assert (20, 2) in got2, f"appended index not seen by batch 2: {got2}"
     # batch-mode mirrors per batch state
@@ -402,35 +310,10 @@ def test_stream_candidates_with_index_refresh_between_batches(spark, tmp_path):
     assert got2 == expect_b1 | expect_b2, (got2, expect_b1, expect_b2)
 
 
-def test_band_index_staleness_report(spark, tmp_path):
-    """r15: fresh index reports tvd≈0/no retrain; a skew-concentrated
-    append fires the retrain signal; an empty baseline raises."""
-    docs = load_table(spark, SF_DIR, "documents").limit(200)
-    ipath = str(tmp_path / "bidx")
-    idx = SD.build_band_index(docs, "doc_id", "text")
-    SD.save_band_index(idx, ipath)
-    fresh = SD.band_index_staleness(spark, ipath)
-    assert fresh["tvd"] < 1e-9 and not fresh["retrain"], fresh
-    # planted shift: every appended row lands in ONE (band, cell)
-    skew = spark.createDataFrame(
-        [(100000 + i, 0, 7) for i in range(900)], "id long, band int, bh long"
-    )
-    SD.append_to_band_index(skew, ipath)
-    stale = SD.band_index_staleness(spark, ipath)
-    assert stale["retrain"] and stale["tvd"] > 0.05, stale
-    # empty baseline raises a diagnosable error
-    epath = str(tmp_path / "bidx_empty")
-    SD.save_band_index(idx.filter("1=0"), epath)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="empty"):
-        SD.band_index_staleness(spark, epath)
-
-
 def test_band_index_fragmentation_flag(spark, tmp_path):
     """r16: append_to_band_index returns {n_files, needs_compaction}
-    from a listing-only count, and band_index_staleness carries the
-    same flag — the lifecycle surfaces its own small-file health."""
+    from a listing-only count — the lifecycle surfaces its own
+    small-file health."""
     docs = load_table(spark, SF_DIR, "documents").limit(120)
     ipath = str(tmp_path / "bidx_frag")
     idx = SD.build_band_index(docs, "doc_id", "text")
@@ -443,8 +326,3 @@ def test_band_index_fragmentation_flag(spark, tmp_path):
     assert r1["n_files"] >= 1 and not r1["needs_compaction"], r1
     r2 = SD.append_to_band_index(batch, ipath, files_threshold=1)
     assert r2["n_files"] > r1["n_files"] and r2["needs_compaction"], (r1, r2)
-    rep = SD.band_index_staleness(spark, ipath, files_threshold=1)
-    assert rep["n_files"] == r2["n_files"] and rep["needs_compaction"], rep
-    assert not SD.band_index_staleness(
-        spark, ipath, files_threshold=100_000
-    )["needs_compaction"]

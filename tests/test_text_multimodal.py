@@ -295,55 +295,6 @@ def test_repetition_ratio_matches_reference(spark):
     assert 0.0 <= stats.lo <= stats.hi < 1.0
 
 
-def test_python_udtfs_register_and_match_codegen_path(spark):
-    """Spark-4 Python UDTFs (@udtf) register for SQL LATERAL use and
-    agree with the codegen explode implementations they mirror:
-    word_ngrams ≡ the normalized-token n-gram expansion behind
-    dedup.shingles; split_budget respects the token budget and
-    reassembles to the original text."""
-    from distributedqueryengine_spark.functions.udtfs import register_udtfs
-
-    register_udtfs(spark)
-    df = spark.createDataFrame(
-        [
-            (1, "The quick  brown fox jumps"),
-            (2, "tiny"),
-            (3, "  "),
-        ],
-        "doc_id long, text string",
-    )
-    df.createOrReplaceTempView("udtf_docs")
-
-    got = {
-        (r.doc_id, r.pos, r.gram)
-        for r in spark.sql(
-            "SELECT doc_id, t.pos, t.gram "
-            "FROM udtf_docs, LATERAL word_ngrams(text, 3) t"
-        ).collect()
-    }
-    expect = set()
-    for doc_id, text in [(1, "The quick  brown fox jumps"), (2, "tiny"), (3, "  ")]:
-        toks = " ".join(text.lower().strip().split()).split(" ")
-        if toks == [""]:
-            continue
-        for i in range(len(toks) - 3 + 1):
-            expect.add((doc_id, i, " ".join(toks[i : i + 3])))
-    assert got == expect
-    assert (1, 0, "the quick brown") in got
-    assert not any(d == 2 for d, _, _ in got)  # shorter than n → no rows
-
-    pieces = spark.sql(
-        "SELECT doc_id, t.part, t.piece "
-        "FROM udtf_docs, LATERAL split_budget(text, 2) t ORDER BY doc_id, part"
-    ).collect()
-    by_doc: dict[int, list[str]] = {}
-    for r in pieces:
-        assert len(r.piece.split()) <= 2
-        by_doc.setdefault(r.doc_id, []).append(r.piece)
-    assert " ".join(by_doc[1]) == "The quick brown fox jumps"
-    assert by_doc[2] == ["tiny"]
-
-
 def test_unicode_fingerprints_agree_with_duckdb(spark):
     """Content fingerprints on non-ASCII text: md5 over UTF-8 bytes
     must agree byte-for-byte with DuckDB (and hashlib) for CJK,
